@@ -2,7 +2,7 @@ package graft
 
 import graft.model.CellModel
 import graft.model.CellModel.TableMeta
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Command-line shell over [[Pipeline]] — the analogue of the
   * reference's `TTLRemoverCLI` (`impl/.../cli/TTLRemoverCLI.java:
@@ -31,27 +31,17 @@ import org.apache.spark.sql.SparkSession
   * (backward-compatible convenience).
   *
   * `--format sstabledump` accepts real-Cassandra input: --in points
-  * at `sstabledump` JSON (one per SSTable), converted through
-  * [[graft.sources.SSTableDumpBridge]] — liveness comes from the dump
-  * itself, so no cell-model flags apply.
+  * at `sstabledump` JSON (one per SSTable, a file or a directory
+  * tree), read through [[graft.sources.SSTableDumpBridge.read]] —
+  * liveness comes from the dump itself, so no cell-model flags apply.
   *
-  * Usage:
-  * `--merge lww` (sstabledump only) reconciles ALL input generations
+  * `--merge lww` (dump/binary formats) reconciles ALL input generations
   * through [[graft.ops.TtlOps.lwwMerge]] before writing — a directory
   * of SSTable dumps collapses to the table's effective state
   * (highest-writetime cells, tombstone shadowing applied, markers
   * preserved), the step the reference leaves to the Cassandra server.
   *
-  * Usage:
-  *   graft.RemoverCli --in <dir> --out <dir> --table <name>
-  *     [--keyspace <ks>] [--cpus <n>]
-  *     [--format parquet|sstabledump|sstable]
-  *     [--merge lww] [--reader json|v2] [--sink parquet|sstable]
-  *     [--compress lz4|snappy|deflate|zstd]   (sstable sink output)
-  *     [--cql "CREATE TABLE ..."]  (parquet cell model; 2.x binary
-  *       input schema; typed binary sink output)
-  *     [--pk <cols> --ck <cols> --cells <cols> --writetime <col>
-  *      --ttl-key <col>]
+  * Usage: see [[Usage]], which names every flag the parser accepts.
   *
   * Inventory mode (`sstablemetadata`'s UX, read-only):
   *   graft.RemoverCli --inventory true --in <lake dir>
@@ -92,7 +82,7 @@ object RemoverCli {
       cells: Seq[String] = Seq.empty,
       writetime: Option[String] = None, ttlKey: Option[String] = None,
       format: String = "parquet", merge: Option[String] = None,
-      reader: String = "json", sink: String = "parquet",
+      sink: String = "parquet",
       cqlSchema: Option[graft.model.CqlSchema.Parsed] = None,
       cqlText: Option[String] = None,
       compress: Option[String] = None,
@@ -141,9 +131,9 @@ object RemoverCli {
         * restores and keeps decaying across runs). */
       trackActivityOut: Option[String] = None)
 
-  private val Flags = Set("in", "out", "table", "keyspace", "cpus",
+  private[graft] val Flags = Set("in", "out", "table", "keyspace", "cpus",
     "pk", "ck", "cells", "writetime", "ttl-key", "format", "merge",
-    "reader", "sink", "cql", "compress", "verify", "scrub",
+    "sink", "cql", "compress", "verify", "scrub",
     "out-generations", "inventory", "stats", "set-level",
     "set-repaired-at", "summary-budget", "activity", "track-activity")
 
@@ -187,192 +177,138 @@ object RemoverCli {
         case (_, None, _) => Left("--out <dir> is required")
         case (_, _, None) => Left("--table <name> is required")
         case (Some(i), Some(o), Some(t)) =>
-          if (java.nio.file.Paths.get(o).toAbsolutePath ==
-            java.nio.file.Paths.get(i).toAbsolutePath)
-            Left("--out must differ from --in (originals are kept)")
-          else {
-            val cpus = m.getOrElse("cpus", "8")
-            val outGens = m.get("out-generations")
-              .map(_.toIntOption.filter(_ >= 1))
-            (cpus.toIntOption.filter(_ > 0), outGens) match {
-              case (None, _) =>
-                Left(s"--cpus must be a positive int, got '$cpus'")
-              case (_, Some(None)) =>
-                Left("--out-generations must be a positive int")
-              case (Some(c), og) =>
-                val args = CliArgs(i, o, t,
-                  m.getOrElse("keyspace", "graft"), c,
-                  pk = m.get("pk").map(csv).getOrElse(Seq.empty),
-                  ck = m.get("ck").map(csv).getOrElse(Seq.empty),
-                  cells = m.get("cells").map(csv).getOrElse(Seq.empty),
-                  writetime = m.get("writetime"),
-                  ttlKey = m.get("ttl-key"),
-                  format = m.getOrElse("format", "parquet"),
-                  merge = m.get("merge"),
-                  reader = m.getOrElse("reader", "json"),
-                  sink = m.getOrElse("sink", "parquet"),
-                  compress = m.get("compress").map(_.toLowerCase),
-                  verify = m.get("verify").exists(_.toBoolean),
-                  scrub = m.get("scrub").exists(_.toBoolean),
-                  outGenerations = og.flatten.getOrElse(1))
-                applyCql(args, m)
-                  .flatMap(validateFormat).flatMap(validateMerge)
-                  .flatMap(validateReader).flatMap(validateSink)
-                  .flatMap(a =>
-                  // dump/binary formats bring their own liveness
-                  // model, so the cell-spec rules don't apply to them
-                  if (isDump(a)) Right(a)
-                  else validateCellSpec(a))
+          for {
+            _ <- distinctOut(i, o)
+            c <- cpusOf(m)
+            og <- m.get("out-generations") match {
+              case None => Right(1)
+              case Some(v) => v.toIntOption.filter(_ >= 1)
+                .toRight("--out-generations must be a positive int")
             }
-          }
+            args = CliArgs(i, o, t,
+              m.getOrElse("keyspace", "graft"), c,
+              pk = m.get("pk").map(csv).getOrElse(Seq.empty),
+              ck = m.get("ck").map(csv).getOrElse(Seq.empty),
+              cells = m.get("cells").map(csv).getOrElse(Seq.empty),
+              writetime = m.get("writetime"),
+              ttlKey = m.get("ttl-key"),
+              format = m.getOrElse("format", "parquet"),
+              merge = m.get("merge"),
+              sink = m.getOrElse("sink", "parquet"),
+              compress = m.get("compress").map(_.toLowerCase),
+              verify = m.get("verify").exists(_.toBoolean),
+              scrub = m.get("scrub").exists(_.toBoolean),
+              outGenerations = og)
+            a <- applyCql(args, m)
+              .flatMap(validateFormat).flatMap(validateMerge)
+              .flatMap(validateSink)
+            // dump/binary formats bring their own liveness model, so
+            // the cell-spec rules don't apply to them
+            v <- if (isDump(a)) Right(a) else validateCellSpec(a)
+          } yield v
       }
     }
   }
 
-  /** `--inventory true` validation: a read-only sidecar listing takes
-    * `--in` (required), `--out` (optional parquet persist) and
-    * `--cpus`; every transform flag beside it is a contradiction the
-    * user should hear about, not a silently ignored intent. */
-  private def parseInventory(m: Map[String, String])
-      : Either[String, CliArgs] = {
-    val allowed = Set("inventory", "in", "out", "cpus", "stats")
-    val stray = (m.keySet -- allowed).toSeq.sorted
-    if (stray.nonEmpty)
-      Left(s"--inventory lists generations from sidecars (read-only); " +
-        s"${stray.map("--" + _).mkString("/")} do" +
-        (if (stray.size == 1) "es" else "") + " not apply")
-    else m.get("in") match {
-      case None => Left("--in <dir> is required")
-      case Some(i) =>
-        val cpus = m.getOrElse("cpus", "8")
-        cpus.toIntOption.filter(_ > 0) match {
-          case None => Left(s"--cpus must be a positive int, got '$cpus'")
-          case Some(c) =>
-            val out = m.getOrElse("out", "")
-            if (out.nonEmpty && java.nio.file.Paths.get(out)
-              .toAbsolutePath ==
-              java.nio.file.Paths.get(i).toAbsolutePath)
-              Left("--out must differ from --in (originals are kept)")
-            else Right(CliArgs(i, out, table = "", cpus = c,
-              inventory = true,
-              stats = m.get("stats").exists(_.toBoolean)))
-        }
-    }
+  /** `--cpus` (default 8) as a positive int. */
+  private def cpusOf(m: Map[String, String]): Either[String, Int] = {
+    val v = m.getOrElse("cpus", "8")
+    v.toIntOption.filter(_ > 0)
+      .toRight(s"--cpus must be a positive int, got '$v'")
   }
+
+  /** Every mode writing to `--out` is non-destructive: the output must
+    * not resolve to the input. */
+  private def distinctOut(in: String, out: String): Either[String, Unit] =
+    if (java.nio.file.Paths.get(out).toAbsolutePath ==
+      java.nio.file.Paths.get(in).toAbsolutePath)
+      Left("--out must differ from --in (originals are kept)")
+    else Right(())
+
+  /** A single-purpose mode names the flags it takes; any other flag
+    * beside it is a contradiction the user should hear about, not a
+    * silently ignored intent. */
+  private def onlyFlags(m: Map[String, String], allowed: Set[String],
+      mode: String): Either[String, Unit] = {
+    val stray = (m.keySet -- allowed).toSeq.sorted
+    if (stray.isEmpty) Right(())
+    else Left(s"$mode; ${stray.map("--" + _).mkString("/")} do" +
+      (if (stray.size == 1) "es" else "") + " not apply")
+  }
+
+  /** `--inventory true` validation: a read-only sidecar listing takes
+    * `--in` (required), `--out` (optional parquet persist), `--stats`
+    * and `--cpus`. */
+  private def parseInventory(m: Map[String, String])
+      : Either[String, CliArgs] =
+    for {
+      _ <- onlyFlags(m, Set("inventory", "in", "out", "cpus", "stats"),
+        "--inventory lists generations from sidecars (read-only)")
+      i <- m.get("in").toRight("--in <dir> is required")
+      c <- cpusOf(m)
+      out = m.getOrElse("out", "")
+      _ <- if (out.nonEmpty) distinctOut(i, out) else Right(())
+    } yield CliArgs(i, out, table = "", cpus = c, inventory = true,
+      stats = m.get("stats").exists(_.toBoolean))
 
   /** `--set-level` / `--set-repaired-at` validation: metadata
     * surgery takes `--in` and `--out` (both required — the rewrite is
-    * non-destructive, originals are kept) plus `--cpus`; any
-    * transform flag beside them is a contradiction. */
+    * non-destructive, originals are kept) plus `--cpus`. */
   private def parseSurgery(m: Map[String, String])
       : Either[String, CliArgs] = {
-    val allowed = Set("set-level", "set-repaired-at", "in", "out", "cpus")
-    val stray = (m.keySet -- allowed).toSeq.sorted
-    if (stray.nonEmpty)
-      return Left("--set-level/--set-repaired-at rewrite Statistics.db " +
-        s"only; ${stray.map("--" + _).mkString("/")} do" +
-        (if (stray.size == 1) "es" else "") + " not apply")
-    val level = m.get("set-level").map(v => v.toIntOption match {
-      case Some(l) if l >= 0 => Right(l)
-      case _ => Left(s"--set-level must be a non-negative int, got '$v'")
-    })
-    val repaired = m.get("set-repaired-at").map(v => v.toLongOption match {
-      case Some(r) if r >= 0 => Right(r)
-      case _ =>
-        Left(s"--set-repaired-at must be epoch millis >= 0, got '$v'")
-    })
-    (level, repaired) match {
-      case (Some(Left(e)), _) => Left(e)
-      case (_, Some(Left(e))) => Left(e)
-      case _ =>
-        (m.get("in"), m.get("out")) match {
-          case (None, _) => Left("--in <dir> is required")
-          case (_, None) =>
-            Left("--out <dir> is required (surgery keeps originals)")
-          case (Some(i), Some(o)) =>
-            if (java.nio.file.Paths.get(o).toAbsolutePath ==
-              java.nio.file.Paths.get(i).toAbsolutePath)
-              Left("--out must differ from --in (originals are kept)")
-            else {
-              val cpus = m.getOrElse("cpus", "8")
-              cpus.toIntOption.filter(_ > 0) match {
-                case None =>
-                  Left(s"--cpus must be a positive int, got '$cpus'")
-                case Some(c) => Right(CliArgs(i, o, table = "",
-                  cpus = c,
-                  setLevel = level.map(_.toOption.get),
-                  setRepairedAt = repaired.map(_.toOption.get)))
-              }
-            }
-        }
+    def opt[T](k: String, p: String => Option[T], err: String => String)
+        : Either[String, Option[T]] = m.get(k) match {
+      case None => Right(None)
+      case Some(v) => p(v).map(Some(_)).toRight(err(v))
     }
+    for {
+      _ <- onlyFlags(m, Set("set-level", "set-repaired-at", "in", "out",
+        "cpus"), "--set-level/--set-repaired-at rewrite Statistics.db only")
+      level <- opt("set-level", _.toIntOption.filter(_ >= 0),
+        v => s"--set-level must be a non-negative int, got '$v'")
+      repaired <- opt("set-repaired-at", _.toLongOption.filter(_ >= 0),
+        v => s"--set-repaired-at must be epoch millis >= 0, got '$v'")
+      i <- m.get("in").toRight("--in <dir> is required")
+      o <- m.get("out")
+        .toRight("--out <dir> is required (surgery keeps originals)")
+      _ <- distinctOut(i, o)
+      c <- cpusOf(m)
+    } yield CliArgs(i, o, table = "", cpus = c, setLevel = level,
+      setRepairedAt = repaired)
   }
 
   /** `--summary-budget <marks>` validation: redistribution takes
     * `--in` and `--out` (non-destructive, originals kept), optional
-    * `--activity <parquet>` and `--cpus`; any transform flag beside
-    * them is a contradiction. */
+    * `--activity <parquet>` and `--cpus`. */
   private def parseSummaryBudget(m: Map[String, String])
-      : Either[String, CliArgs] = {
-    val allowed = Set("summary-budget", "activity", "in", "out", "cpus")
-    val stray = (m.keySet -- allowed).toSeq.sorted
-    if (stray.nonEmpty)
-      return Left("--summary-budget rewrites Summary.db files only; " +
-        s"${stray.map("--" + _).mkString("/")} do" +
-        (if (stray.size == 1) "es" else "") + " not apply")
-    m("summary-budget").toLongOption.filter(_ > 0) match {
-      case None =>
-        Left("--summary-budget must be a positive mark count, got " +
+      : Either[String, CliArgs] =
+    for {
+      _ <- onlyFlags(m, Set("summary-budget", "activity", "in", "out",
+        "cpus"), "--summary-budget rewrites Summary.db files only")
+      budget <- m("summary-budget").toLongOption.filter(_ > 0).toRight(
+        "--summary-budget must be a positive mark count, got " +
           s"'${m("summary-budget")}'")
-      case Some(budget) =>
-        (m.get("in"), m.get("out")) match {
-          case (None, _) => Left("--in <dir> is required")
-          case (_, None) =>
-            Left("--out <dir> is required (redistribution keeps " +
-              "originals)")
-          case (Some(i), Some(o)) =>
-            if (java.nio.file.Paths.get(o).toAbsolutePath ==
-              java.nio.file.Paths.get(i).toAbsolutePath)
-              Left("--out must differ from --in (originals are kept)")
-            else {
-              val cpus = m.getOrElse("cpus", "8")
-              cpus.toIntOption.filter(_ > 0) match {
-                case None =>
-                  Left(s"--cpus must be a positive int, got '$cpus'")
-                case Some(c) => Right(CliArgs(i, o, table = "",
-                  cpus = c, summaryBudget = Some(budget),
-                  activity = m.get("activity")))
-              }
-            }
-        }
-    }
-  }
+      i <- m.get("in").toRight("--in <dir> is required")
+      o <- m.get("out").toRight(
+        "--out <dir> is required (redistribution keeps originals)")
+      _ <- distinctOut(i, o)
+      c <- cpusOf(m)
+    } yield CliArgs(i, o, table = "", cpus = c,
+      summaryBudget = Some(budget), activity = m.get("activity"))
 
   /** `--track-activity <parquet>` validation: a read-only tracked
     * scan takes `--in` (and `--cql` for a pre-3.0 lake, whose files
     * carry no serialization header); the flag's value is the
-    * activity table's destination. Any transform flag is a
-    * contradiction. */
+    * activity table's destination. */
   private def parseTrackActivity(m: Map[String, String])
-      : Either[String, CliArgs] = {
-    val allowed = Set("track-activity", "in", "cpus", "cql")
-    val stray = (m.keySet -- allowed).toSeq.sorted
-    if (stray.nonEmpty)
-      return Left("--track-activity is a read-only metered scan; " +
-        s"${stray.map("--" + _).mkString("/")} do" +
-        (if (stray.size == 1) "es" else "") + " not apply")
-    m.get("in") match {
-      case None => Left("--in <dir> is required")
-      case Some(i) =>
-        val cpus = m.getOrElse("cpus", "8")
-        cpus.toIntOption.filter(_ > 0) match {
-          case None => Left(s"--cpus must be a positive int, got '$cpus'")
-          case Some(c) => Right(CliArgs(i, out = "", table = "",
-            cpus = c, cqlText = m.get("cql"),
-            trackActivityOut = Some(m("track-activity"))))
-        }
-    }
-  }
+      : Either[String, CliArgs] =
+    for {
+      _ <- onlyFlags(m, Set("track-activity", "in", "cpus", "cql"),
+        "--track-activity is a read-only metered scan")
+      i <- m.get("in").toRight("--in <dir> is required")
+      c <- cpusOf(m)
+    } yield CliArgs(i, out = "", table = "", cpus = c,
+      cqlText = m.get("cql"), trackActivityOut = Some(m("track-activity")))
 
   /** `--cql "CREATE TABLE ..."` — the reference CLI's schema language
     * (`TTLRemoverCLI.java:166-170` hands exactly this string to
@@ -459,26 +395,6 @@ object RemoverCli {
         "(expected parquet, sstabledump or sstable)")
     }
 
-  /** `--reader v2` routes dump ingestion through the streamed
-    * DataSourceV2 connector (partition-bounded memory — the right
-    * choice when single dump files are large); the default `json`
-    * reader is Spark's multiLine source (whole-file parse units).
-    * Only the dump format has a reader to choose. */
-  private def validateReader(a: CliArgs): Either[String, CliArgs] =
-    a.reader match {
-      case "json" => Right(a)
-      case "v2" =>
-        if (a.format == "sstabledump") Right(a)
-        else Left("--reader v2 requires --format sstabledump " +
-          "(--format sstable decodes binary directly and has no reader choice)")
-      case other => Left(s"unknown --reader '$other' (expected json or v2)")
-    }
-
-  /** `--sink sstable` writes the output back as big-format SSTABLES
-    * (one rewritten generation per input SSTable; with `--merge lww`,
-    * ONE compacted generation — a major compaction) instead of the
-    * parquet lake layout. Only the dump-family formats carry the
-    * cell model the binary writer serializes. */
   /** CLI compressor names → Cassandra compressor class simple names
     * (the table-schema `compression.class` values). */
   private val Compressors = Map(
@@ -487,6 +403,12 @@ object RemoverCli {
     "deflate" -> graft.sources.CompressedData.Deflate,
     "zstd" -> graft.sources.CompressedData.Zstd)
 
+  /** `--sink sstable` writes the output back as big-format SSTABLES
+    * (one rewritten generation per input SSTable; with `--merge lww`,
+    * ONE compacted generation — a major compaction) instead of the
+    * parquet lake layout; `--sink sstabledump` exports dump JSON.
+    * Only the dump-family formats carry the cell model either
+    * writer serializes. */
   private def validateSink(a: CliArgs): Either[String, CliArgs] =
     a.sink match {
       case "parquet" =>
@@ -631,13 +553,11 @@ object RemoverCli {
     else if (args.sink == "sstabledump")
       runDumpExport(spark, args)
     else if (isDump(args) && args.merge.contains("lww"))
-      graft.sources.SSTableDumpBridge.mergeTtlToDir(
-        spark, args.in, args.out, args.keyspace, args.table,
-        reader = dumpReader(args))
+      graft.sources.SSTableDumpBridge.mergeTtlToDir(input(spark, args),
+        args.out, args.keyspace, args.table)
     else if (isDump(args))
-      graft.sources.SSTableDumpBridge.removeTtlToDir(
-        spark, args.in, args.out, args.keyspace, args.table,
-        reader = dumpReader(args))
+      graft.sources.SSTableDumpBridge.removeTtlToDir(input(spark, args),
+        args.out, args.keyspace, args.table)
     else if (args.cells.isEmpty) {
       val meta = CellModel.eventsMeta.copy(keyspace = args.keyspace)
       Pipeline.removeTtlFromDir(spark, args.in, args.out, meta)
@@ -723,22 +643,11 @@ object RemoverCli {
     * dump per input SSTable. Returns rows exported. */
   private def runDumpExport(spark: SparkSession, args: CliArgs): Long = {
     import org.apache.spark.sql.functions._
-    val reader = dumpReader(args)
     val frame =
-      if (args.merge.contains("lww")) {
-        val merged = graft.sources.SSTableDumpBridge
-          .mergeTree(spark, args.in, reader)
-        val live = col("row_kind").isin("ROW", "PK_LIVENESS")
-        merged.select(
-          col("partition_key"), col("clustering"), col("row_kind"),
-          col("name"),
-          when(live, struct(col("value"), col("writetime_us"),
-            lit(null).cast("int").as("ttl_s"),
-            lit(null).cast("long").as("expire_us"))).as("cell"),
-          col("deletion_us"),
-          lit(s"${args.table}/${args.table}-merged.json").as("sstable"))
-      } else reader(spark, args.in).withColumn("cell",
-        graft.model.CellModel.stripCellKeepDeletion(col("cell")))
+      if (args.merge.contains("lww"))
+        mergedCells(spark, args,
+          lit(s"${args.table}/${args.table}-merged.json"))
+      else stripped(spark, args)
     // the row count rides the export's own action (observe) — a
     // localCheckpoint here would cache the whole frame just to count
     // it, and a separate count() would re-scan the source
@@ -749,61 +658,35 @@ object RemoverCli {
   }
 
   /** The `--sink sstable` execution paths: read the dump-family
-    * input through its sstable-identity-carrying reader, then either
-    * strip TTLs and rewrite ONE output SSTable per input SSTable (the
-    * reference's exact rewrite contract, binary in → binary out), or
-    * — with `--merge lww` — collapse every generation through the LWW
-    * merge and write ONE compacted generation: a major compaction.
-    * Returns rows written (the sink's own per-file manifest). */
+    * input, then either strip TTLs and rewrite ONE output SSTable per
+    * input SSTable (the reference's exact rewrite contract, binary in
+    * → binary out), or — with `--merge lww` — collapse every
+    * generation through the LWW merge and write ONE compacted
+    * generation: a major compaction. Returns rows written (the sink's
+    * own per-file manifest). */
   private def runSstableSink(spark: SparkSession, args: CliArgs): Long = {
     import org.apache.spark.sql.functions._
-    val reader: (SparkSession, String) => org.apache.spark.sql.DataFrame =
-      if (args.format == "sstable")
-        (s, p) => graft.sources.SSTableBinaryV2.readBinary(s, p,
-          args.cqlText, args.verify, args.scrub)
-      else if (args.reader == "v2")
-        graft.sources.SSTableDumpBridge.readTreeV2
-      else graft.sources.SSTableDumpBridge.readTree
-    if (args.merge.contains("lww")) {
-      val merged = graft.sources.SSTableDumpBridge
-        .mergeTree(spark, args.in, reader)
-      val live = col("row_kind").isin("ROW", "PK_LIVENESS")
-      // `--out-generations N`: a major compaction must not funnel
-      // 100 TB through ONE encoder task. The merged cells partition
-      // into N token-CONTIGUOUS output generations by fixed ring
-      // division (deterministic, zero extra passes; Murmur3 uniformity
-      // balances sizes at scale), so each generation is itself a valid
-      // token-ordered SSTable whose Summary first/last keys support
-      // file-level range elision on the OUTPUT lake — the same
-      // size-bounded multi-file shape a real compaction strategy
-      // produces. N=1 keeps the reference's single-file contract.
-      // The bucket token is the REAL ring position: on a typed table
-      // the key encodes through the declared key type before hashing
-      // (the token the sink itself sorts by) — bucketing by the
-      // rendered-string token would make generations overlap on the
-      // real ring, defeating Summary-range file elision downstream.
-      val genName =
-        if (args.outGenerations <= 1)
-          lit(s"${args.table}/nb-1-big-Data.db")
-        else
-          concat(lit(s"${args.table}/nb-"),
-            (ringBucket(args) + lit(1)).cast("string"),
-            lit("-big-Data.db"))
-      val reshaped = merged.select(
-        col("partition_key"), col("clustering"), col("row_kind"),
-        col("name"),
-        when(live, struct(col("value"), col("writetime_us"),
-          lit(null).cast("int").as("ttl_s"),
-          lit(null).cast("long").as("expire_us"))).as("cell"),
-        col("deletion_us"),
-        genName.as("sstable"))
-      graft.sources.SSTableBinaryV2
-        .writeSSTables(reshaped, args.out, args.keyspace, args.table,
-          args.cqlSchema, args.compress.map(Compressors))
-        .map(_._2).sum
-    } else {
-      val stripped = reader(spark, args.in).withColumn("cell",
-        graft.model.CellModel.stripCellKeepDeletion(col("cell")))
+    val reshaped =
+      if (args.merge.contains("lww")) {
+        // `--out-generations N`: a major compaction must not funnel
+        // 100 TB through ONE encoder task. The merged cells partition
+        // into N token-CONTIGUOUS output generations by fixed ring
+        // division (deterministic, zero extra passes; Murmur3
+        // uniformity balances sizes at scale), so each generation is
+        // itself a valid token-ordered SSTable whose Summary first/last
+        // keys support file-level range elision on the OUTPUT lake —
+        // the same size-bounded multi-file shape a real compaction
+        // strategy produces. N=1 keeps the reference's single-file
+        // contract.
+        val genName =
+          if (args.outGenerations <= 1)
+            lit(s"${args.table}/nb-1-big-Data.db")
+          else
+            concat(lit(s"${args.table}/nb-"),
+              (ringBucket(args) + lit(1)).cast("string"),
+              lit("-big-Data.db"))
+        mergedCells(spark, args, genName)
+      } else if (args.outGenerations <= 1) stripped(spark, args)
       // UNMERGED `--out-generations N` = sstablesplit's role: each
       // input generation splits into N token-contiguous outputs (one
       // oversized SSTable stops serializing its own rewrite — N
@@ -814,26 +697,55 @@ object RemoverCli {
       // number and the rest take the next free integers in sorted
       // source order — collision-free and deterministic, interleaved
       // with (not renumbered from) the input numbering.
-      val reshaped =
-        if (args.outGenerations <= 1) stripped
-        else stripped.withColumn("sstable",
-          concat(col("sstable"), lit("#s"),
-            ringBucket(args).cast("string")))
-      graft.sources.SSTableBinaryV2
-        .writeSSTables(reshaped, args.out, args.keyspace, args.table,
-          args.cqlSchema, args.compress.map(Compressors))
-        .map(_._2).sum
-    }
+      else stripped(spark, args).withColumn("sstable",
+        concat(col("sstable"), lit("#s"), ringBucket(args).cast("string")))
+    graft.sources.SSTableBinaryV2
+      .writeSSTables(reshaped, args.out, args.keyspace, args.table,
+        args.cqlSchema, args.compress.map(Compressors))
+      .map(_._2).sum
+  }
+
+  /** The bridge-row frame of `--in`, `sstable` identity included:
+    * `--format sstable` is the no-pre-pass path (the big-format
+    * connector decodes *-Data.db directly), `--format sstabledump`
+    * reads dump JSON through the streamed dump connector. */
+  private def input(spark: SparkSession, args: CliArgs): DataFrame =
+    if (args.format == "sstable")
+      graft.sources.SSTableBinaryV2.readBinary(spark, args.in,
+        args.cqlText, args.verify, args.scrub)
+    else graft.sources.SSTableDumpBridge.read(spark, args.in)
+
+  /** [[input]] with TTL metadata stripped from every live cell. */
+  private def stripped(spark: SparkSession, args: CliArgs): DataFrame =
+    input(spark, args).withColumn("cell",
+      CellModel.stripCellKeepDeletion(
+        org.apache.spark.sql.functions.col("cell")))
+
+  /** [[input]] LWW-merged back into bridge rows named `sstable`:
+    * winners carry value + writetime only (the merge IS the strip),
+    * deletion markers a null cell. */
+  private def mergedCells(spark: SparkSession, args: CliArgs,
+      sstable: Column): DataFrame = {
+    import org.apache.spark.sql.functions._
+    val live = col("row_kind").isin("ROW", "PK_LIVENESS")
+    graft.sources.SSTableDumpBridge.mergeTree(input(spark, args)).select(
+      col("partition_key"), col("clustering"), col("row_kind"),
+      col("name"),
+      when(live, struct(col("value"), col("writetime_us"),
+        lit(null).cast("int").as("ttl_s"),
+        lit(null).cast("long").as("expire_us"))).as("cell"),
+      col("deletion_us"),
+      sstable.as("sstable"))
   }
 
   /** Ring-division bucket in [0, N) of the REAL partitioner token —
     * typed through the declared CQL key type when one is given (the
     * token the sink itself sorts by; a rendered-string token would
-    * put typed tables' generations off the real ring). Deterministic,
-    * zero extra passes; Murmur3 uniformity balances bucket sizes at
-    * any scale. */
-  private def ringBucket(args: CliArgs)
-      : org.apache.spark.sql.Column = {
+    * put typed tables' generations off the real ring, defeating
+    * Summary-range file elision downstream). Deterministic, zero
+    * extra passes; Murmur3 uniformity balances bucket sizes at any
+    * scale. */
+  private def ringBucket(args: CliArgs): Column = {
     import org.apache.spark.sql.functions._
     val n = args.outGenerations
     val tok = args.cqlSchema match {
@@ -854,47 +766,34 @@ object RemoverCli {
   private def isDump(args: CliArgs): Boolean =
     args.format == "sstabledump" || args.format == "sstable"
 
-  private def dumpReader(args: CliArgs)
-      : (SparkSession, String) => org.apache.spark.sql.DataFrame =
-    // `sstable` is the no-pre-pass path: the big-format connector
-    // decodes *-Data.db directly into the same bridge-row frame
-    if (args.format == "sstable")
-      (s, p) => graft.sources.SSTableBinaryV2.readBinary(s, p,
-        args.cqlText, args.verify, args.scrub)
-    else if (args.reader == "v2") graft.sources.SSTableDumpBridge.readTreeV2
-    else if (args.merge.contains("lww"))
-      graft.sources.SSTableDumpBridge.readTree
-    else graft.sources.SSTableDumpBridge.read
+  /** The usage text [[main]] prints on a parse error: one line per
+    * mode, every flag of [[Flags]] named. */
+  private[graft] val Usage: String =
+    """usage: graft.RemoverCli --in <dir> --out <dir> --table <name>
+      |         [--keyspace <ks>] [--cpus <n>]
+      |         [--format parquet|sstabledump|sstable] [--merge lww]
+      |         [--sink parquet|sstable|sstabledump] [--out-generations <n>]
+      |         [--compress lz4|snappy|deflate|zstd]
+      |         [--verify true|false] [--scrub true|false]
+      |         [--cql "CREATE TABLE ..."]
+      |         [--pk <cols> [--ck <cols>] --cells <cols>
+      |          --writetime <col> [--ttl-key <col>]]
+      |       graft.RemoverCli --inventory true --in <dir> [--stats true]
+      |         [--out <dir>] [--cpus <n>]
+      |       graft.RemoverCli --set-level <n> [--set-repaired-at <ms>]
+      |         --in <dir> --out <dir> [--cpus <n>]
+      |       graft.RemoverCli --summary-budget <marks> --in <dir> --out <dir>
+      |         [--activity <parquet>] [--cpus <n>]
+      |       graft.RemoverCli --track-activity <parquet> --in <dir>
+      |         [--cql "CREATE TABLE ..."] [--cpus <n>]""".stripMargin
 
   def main(argv: Array[String]): Unit = parse(argv) match {
     case Left(err) =>
       System.err.println(s"error: $err")
-      System.err.println(
-        "usage: graft.RemoverCli --in <dir> --out <dir> --table <name>" +
-          " [--keyspace <ks>] [--cpus <n>]" +
-          " | --inventory true --in <dir> [--stats true] [--out <dir>]" +
-          " [--cpus <n>]" +
-          " | --set-level <n> [--set-repaired-at <ms>] --in <dir>" +
-          " --out <dir>" +
-          " | --summary-budget <marks> --in <dir> --out <dir>" +
-          " [--activity <parquet>]" +
-          " | --track-activity <parquet> --in <dir>" +
-          " [--cql \"CREATE TABLE ...\"]" +
-          " [--format parquet|sstabledump|sstable]" +
-          " [--merge lww] [--reader json|v2] [--sink parquet|sstable]" +
-          " [--compress lz4|snappy|deflate|zstd]" +
-          " [--cql \"CREATE TABLE ...\" --writetime <col>]" +
-          " [--pk <cols> --ck <cols> --cells <cols> --writetime <col>" +
-          " --ttl-key <col>]")
+      System.err.println(Usage)
       sys.exit(2)
     case Right(args) =>
-      val spark = SparkSession.builder()
-        .master(s"local[${args.cpus}]")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = Session.local(args.cpus)
       try {
         val rows = run(spark, args)
         if (args.inventory)

@@ -129,7 +129,6 @@ object SparkEntry {
     "src_jsonl_corrupt" -> (sources.JsonlCorpus.corruptAccounting _),
     // --- sstabledump tree ingestion (sources.SSTableDumpBridge) ---
     "src_sstabledump_tree" -> (sources.SSTableDumpBridge.treeAudit _),
-    "src_sstabledump_v2" -> (sources.SSTableDumpBridge.treeAuditV2 _),
     "src_sstable_binary" -> (sources.SSTableBinaryV2.binaryAudit _),
     "src_sstable_split" -> (sources.SSTableBinaryV2.splitAudit _),
     "src_sstable_binary_3x" -> (sources.SSTableBinaryV2.binaryAudit3x _),
@@ -2812,9 +2811,6 @@ object SparkEntry {
     // the export loop (binary → dump JSON → re-ingest) answers to the
     // SAME tree contract as every direct ingestion path
     "src_sstable_dump_export" -> sstabledumpTreeSql,
-    // same oracle VERBATIM for the V2-connector ingestion path: one
-    // semantic contract, both IO paths held to it
-    "src_sstabledump_v2" -> sstabledumpTreeSql,
     // the binary big-format decoder answers to the SAME contract: the
     // fixture content is identical, only the on-disk encoding differs
     "src_sstable_binary" -> sstabledumpTreeSql,
@@ -4452,8 +4448,8 @@ object SparkEntry {
     "st_dedup_wm" ->
       "SELECT DISTINCT user_id, event_type FROM events",
     // streaming dump ingest: AvailableNow over the tree fixture lands
-    // on the exact batch audit frame — all three ingestion paths
-    // (multiLine, V2 connector, streaming) share this one oracle
+    // on the exact batch audit frame — batch and streaming dump
+    // ingestion share this one oracle
     "st_dump_ingest" -> sstabledumpTreeSql,
     // the stateful streaming merge's final snapshot equals the batch
     // compaction — p_lww_merge's oracle shared verbatim
@@ -4461,8 +4457,8 @@ object SparkEntry {
     // range shadowing as a stream: bounds arriving a batch later
     // retroactively delete — final snapshot equals the batch merge
     "st_lww_range" -> lwwRangeOracle,
-    // continuous binary ingestion: the SIXTH path under the one tree
-    // contract (batch/V2/streaming dump, binary 3.x/4.x, streamed binary)
+    // continuous binary ingestion: one more path under the one tree
+    // contract (batch/streaming dump, binary 3.x/4.x, streamed binary)
     "st_sstable_ingest" -> sstabledumpTreeSql,
     // the streaming EMISSION loop (micro-batches land as loadable
     // generations, re-read whole) answers to the same tree contract

@@ -323,7 +323,11 @@ object TtlOps {
     *     or before their timestamp; a later re-insert survives);
     *   - among surviving versions of one (partition, clustering, name)
     *     cell, the highest writetime wins, ties broken by the greater
-    *     value (Cassandra's timestamp-then-value reconciliation).
+    *     value (Cassandra's timestamp-then-value reconciliation);
+    *   - a CELL_DELETION (cell tombstone) competes as a version of its
+    *     cell at its deletion time and wins a writetime tie; a winning
+    *     tombstone hides every older version, a newer live version
+    *     hides the tombstone.
     *
     * Scale shape: ONE hash exchange on `partition_key` serves the
     * whole merge — the partition-deletion window (pk), the
@@ -341,9 +345,10 @@ object TtlOps {
     * Cassandra rule that tombstones outlive the data they shadowed
     * (they may still shadow cells in SSTables outside this run, so a
     * merge that dropped them would resurrect data downstream —
-    * gc_grace is an explicit, separate decision). Both modes are ONE
-    * single-pass plan: live rows rank within their cell group ordered
-    * unshadowed-first, so no filter-then-rank second pass exists to
+    * gc_grace is an explicit, separate decision); a cell slot keeps
+    * only its winning tombstone, the newest. Both modes are ONE
+    * single-pass plan: versions rank within their cell group ordered
+    * candidates-first, so no filter-then-rank second pass exists to
     * re-run. */
   def lwwMerge(cells: DataFrame, keepMarkers: Boolean = false): DataFrame = {
     val byPk = cells.repartition(col("partition_key"))
@@ -352,7 +357,8 @@ object TtlOps {
     val noDel = lit(Long.MinValue)
     val nvW = Window.partitionBy("partition_key", "clustering", "name")
     val lwwW = Window.partitionBy("partition_key", "clustering", "name")
-      .orderBy(col("ok").desc, col("writetime_us").desc, col("value").desc)
+      .orderBy(col("cand").desc, col("ts").desc, col("cell_del").desc,
+        col("value").desc)
     // RANGE tombstones ("start:<type>" / "end:<type>" bound rows, the
     // bridge's encoding) shadow every clustering inside their bound
     // pair. Bounds reach each row via pk-window collect_lists — no
@@ -385,25 +391,37 @@ object TtlOps {
         col("writetime_us") > coalesce(col("part_del"), noDel) &&
         col("writetime_us") > coalesce(col("row_del"), noDel) &&
         col("writetime_us") > coalesce(col("rt_del"), noDel))
+      // cell tombstones compete with the unshadowed live versions
+      .withColumn("cell_del", col("row_kind") === "CELL_DELETION")
+      .withColumn("cand", col("ok") || col("cell_del"))
+      .withColumn("ts", cellVersionTs)
       .withColumn("rk", row_number().over(lwwW))
       .withColumn("n_versions",
         sum(when(col("ok"), 1L).otherwise(0L)).over(nvW))
-    val winner = col("ok") && col("rk") === 1
+    val winner = col("cand") && col("rk") === 1
     if (keepMarkers)
-      scored.filter(winner || !col("live"))
+      scored.filter(winner || !(col("live") || col("cell_del")))
         .select(col("partition_key"), col("clustering"), col("row_kind"),
           col("name"), col("value"), col("writetime_us"),
           col("deletion_us"),
           when(col("live"), col("n_versions").cast("long"))
             .as("n_versions"))
     else
-      scored.filter(winner)
+      scored.filter(winner && col("live"))
         .select(col("partition_key"), col("clustering"), col("name"),
           col("value"), col("writetime_us"),
           col("n_versions").cast("long").as("n_versions"))
   }
 
-  // --- shared range-tombstone machinery (lwwMerge + skew-safe form) ---
+  // --- machinery shared by lwwMerge and the skew-safe form ---
+
+  /** A cell version's reconciliation time: a live version's
+    * writetime, a cell tombstone's deletion time. */
+  private def cellVersionTs: Column =
+    when(col("row_kind") === "CELL_DELETION",
+      coalesce(col("deletion_us"), col("writetime_us")))
+      .otherwise(col("writetime_us"))
+
   private def isRtBound = col("row_kind") === "RANGE_TOMBSTONE_BOUND"
 
   private def rtBoundStruct =
@@ -451,9 +469,11 @@ object TtlOps {
     * marker extractions (filter-pushed, marker-kind-only scans) but
     * no single task ever owns a whole hot partition — choose it when
     * a partition can outgrow a task, the window form when the input
-    * scan dominates. Identical results by construction; the
-    * registered query shares p_lww_merge's oracle verbatim and
-    * TtlOpsSpec pins frame equality.
+    * scan dominates. Cell tombstones join the pick as versions (a
+    * tie goes to the tombstone) and a winning one emits nothing.
+    * Identical results by construction; the registered query shares
+    * p_lww_merge's oracle verbatim and TtlOpsSpec pins frame
+    * equality.
     */
   def lwwMergeSkewSafe(cells: DataFrame): DataFrame = {
     val noDel = lit(Long.MinValue)
@@ -468,22 +488,25 @@ object TtlOps {
     val rt = cells.filter(isRtBound)
       .groupBy(col("partition_key"))
       .agg(bounds("start").as("rt_starts"), bounds("end").as("rt_ends"))
-    cells.filter(col("row_kind").isin("ROW", "PK_LIVENESS"))
+    val cellDel = col("row_kind") === "CELL_DELETION"
+    cells.filter(col("row_kind").isin("ROW", "PK_LIVENESS", "CELL_DELETION"))
       .join(partDel.hint("broadcast"), Seq("partition_key"), "left")
       .join(rowDel, Seq("partition_key", "clustering"), "left")
       .join(rt.hint("broadcast"), Seq("partition_key"), "left")
       .withColumn("rt_del",
         when(col("rt_starts").isNull, lit(null).cast("long"))
           .otherwise(rtDelExpr))
-      .filter(col("writetime_us") > coalesce(col("part_del"), noDel) &&
+      .filter(cellDel ||
+        col("writetime_us") > coalesce(col("part_del"), noDel) &&
         col("writetime_us") > coalesce(col("row_del"), noDel) &&
         col("writetime_us") > coalesce(col("rt_del"), noDel))
       .groupBy(col("partition_key"), col("clustering"), col("name"))
-      .agg(max(struct(col("writetime_us"), col("value"))).as("w"),
-        count(lit(1)).as("n_versions"))
+      .agg(max(struct(cellVersionTs.as("ts"), cellDel.as("del"),
+          col("value"))).as("w"),
+        count(when(!cellDel, 1)).as("n_versions"))
+      .filter(!col("w.del"))
       .select(col("partition_key"), col("clustering"), col("name"),
-        col("w.value").as("value"),
-        col("w.writetime_us").as("writetime_us"),
+        col("w.value").as("value"), col("w.ts").as("writetime_us"),
         col("n_versions").cast("long").as("n_versions"))
   }
 

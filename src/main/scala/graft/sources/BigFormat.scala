@@ -936,6 +936,38 @@ object BigFormat {
     def ttlIn(delta: Long): Int = (delta + minTtlS).toInt
   }
 
+  /** The per-file EncodingStats minima a [[Header]] carries: min
+    * timestamp, local-deletion second and TTL over everything the
+    * file will hold — partition, row, complex and marker deletions,
+    * row liveness and cells — each falling back to its epoch when the
+    * file holds none. */
+  def encodingMinima(parts: Seq[PartitionData]): (Long, Int, Int) = {
+    var ts = Long.MaxValue; var anyTs = false
+    var ldt = Int.MaxValue; var anyLdt = false
+    var ttl = Int.MaxValue; var anyTtl = false
+    def onTs(v: Long): Unit = { ts = math.min(ts, v); anyTs = true }
+    def onLdt(v: Int): Unit = { ldt = math.min(ldt, v); anyLdt = true }
+    def onTtl(v: Int): Unit = { ttl = math.min(ttl, v); anyTtl = true }
+    parts.foreach { p =>
+      p.deletionUs.foreach(onTs)
+      p.atoms.foreach {
+        case r: RowAtom =>
+          r.livenessTsUs.foreach(onTs)
+          r.deletionUs.foreach(onTs)
+          r.complexDeletions.foreach(d => onTs(d._2))
+          r.livenessLdtS.foreach(onLdt)
+          r.livenessTtlS.foreach(onTtl)
+          r.cells.foreach { c =>
+            onTs(c.tsUs); c.ldtS.foreach(onLdt); c.ttlS.foreach(onTtl)
+          }
+        case m: MarkerAtom => m.deletions.foreach(onTs)
+      }
+    }
+    (if (anyTs) ts else TimestampEpochUs,
+      if (anyLdt) ldt else DeletionTimeEpochS,
+      if (anyTtl) ttl else TtlEpoch)
+  }
+
   private def writeWithVIntLength(bytes: Array[Byte],
       out: DataOutputStream): Unit = {
     writeUnsignedVInt(bytes.length.toLong, out)

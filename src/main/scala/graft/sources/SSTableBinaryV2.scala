@@ -22,8 +22,8 @@ import org.apache.spark.util.SerializableConfiguration
   * the 4.x (nb) and 3.x (me/md) eras, batch AND micro-batch streaming
   * — the ingestion paths that need NO `sstabledump` pre-pass: the
   * [[BigFormat]] codec decodes `*-Data.db` partitions
-  * straight into the same bridge-row frame `readTree`/`readTreeV2`
-  * produce, so the whole operator surface (TTL strip, LWW merge,
+  * straight into the same bridge-row frame the dump reader
+  * `SSTableDumpBridge.read` produces, so the whole operator surface (TTL strip, LWW merge,
   * sorted sink) runs unchanged behind it. This is the reference's own
   * entry point (`Cassandra4TTLRemover.java:45-74` opens the Data.db
   * via the embedded Cassandra runtime) re-expressed as a thin
@@ -41,7 +41,7 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Row-kind mapping is the [[SSTableDumpBridge]] contract verbatim —
   * `src_sstable_binary` shares `src_sstabledump_tree`'s DuckDB oracle
-  * word for word, holding all four IO paths to ONE semantic contract:
+  * word for word, holding every IO path to ONE semantic contract:
   *   - partition-level deletion  → one PARTITION_DELETION row
   *   - row with deletion         → ROW_DELETION (tombstones survive)
   *   - live cells                → one ROW row per cell, cell-level
@@ -76,7 +76,7 @@ object SSTableBinaryV2 {
     StructField("expire_us", LongType)))
 
   /** The bridge-row frame, directly — identical shape to
-    * [[SSTableDumpBridge.readTree]]'s output. */
+    * [[SSTableDumpBridge.read]]'s output. */
   val schema: StructType = StructType(Seq(
     StructField("partition_key", StringType, nullable = false),
     StructField("clustering", ArrayType(StringType, containsNull = true)),
@@ -1691,28 +1691,8 @@ object SSTableBinaryV2 {
                     rowTtl.map(t => (wtSec + 10 + t).toInt),
                     Some(source), deleted = false)))))
         }
-        // per-file EncodingStats minima over what will be written
-        val allTs = parts.flatMap(p =>
-          p.deletionUs.toSeq ++ p.atoms.flatMap {
-            case r: BigFormat.RowAtom =>
-              r.livenessTsUs.toSeq ++ r.deletionUs.toSeq ++
-                r.cells.map(_.tsUs)
-            case m: BigFormat.MarkerAtom => m.deletions
-          })
-        val allLdt = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessLdtS.toSeq ++ r.cells.flatMap(_.ldtS)
-          case _ => Nil
-        })
-        val allTtl = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTtlS.toSeq ++ r.cells.flatMap(_.ttlS)
-          case _ => Nil
-        })
-        val header = fixtureHeader(
-          if (allTs.isEmpty) BigFormat.TimestampEpochUs else allTs.min,
-          if (allLdt.isEmpty) BigFormat.DeletionTimeEpochS else allLdt.min,
-          if (allTtl.isEmpty) BigFormat.TtlEpoch else allTtl.min)
+        val (minTs, minLdt, minTtl) = BigFormat.encodingMinima(parts.toSeq)
+        val header = fixtureHeader(minTs, minLdt, minTtl)
         val gen = fileId + 1
         val fs = FileSystem.get(
           java.net.URI.create(outStr), hconf.value.value)
@@ -1748,7 +1728,7 @@ object SSTableBinaryV2 {
   }
 
   /** The bridge-row frame off a big-format data directory — the
-    * binary sibling of `readTree`/`readTreeV2`. A declared CQL schema
+    * binary sibling of `SSTableDumpBridge.read`. A declared CQL schema
     * is REQUIRED for pre-3.0 ("ka"/"la") files, which carry no
     * serialization header. */
   def readBinary(spark: SparkSession, root: String,
@@ -2617,26 +2597,8 @@ object SSTableBinaryV2 {
               ttl.map(t => (wtSec + t).toInt), None,
               len +: attrsCells, complexDels)))
         }
-        val allTs = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTsUs.toSeq ++ r.cells.map(_.tsUs) ++
-              r.complexDeletions.map(_._2)
-          case _ => Nil
-        })
-        val allLdt = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessLdtS.toSeq ++ r.cells.flatMap(_.ldtS)
-          case _ => Nil
-        })
-        val allTtl = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTtlS.toSeq ++ r.cells.flatMap(_.ttlS)
-          case _ => Nil
-        })
-        val header = BigFormat.Header(
-          if (allTs.isEmpty) BigFormat.TimestampEpochUs else allTs.min,
-          if (allLdt.isEmpty) BigFormat.DeletionTimeEpochS else allLdt.min,
-          if (allTtl.isEmpty) BigFormat.TtlEpoch else allTtl.min,
+        val (minTs, minLdt, minTtl) = BigFormat.encodingMinima(parts.toSeq)
+        val header = BigFormat.Header(minTs, minLdt, minTtl,
           keyType = BigFormat.Utf8Type,
           clusteringTypes = Seq(BigFormat.Utf8Type),
           staticColumns = Nil,
@@ -2714,25 +2676,8 @@ object SSTableBinaryV2 {
           BigFormat.PartitionData(docId.toString, None,
             Seq(staticRow, clustered))
         }
-        val allTs = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTsUs.toSeq ++ r.cells.map(_.tsUs)
-          case _ => Nil
-        })
-        val allLdt = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessLdtS.toSeq ++ r.cells.flatMap(_.ldtS)
-          case _ => Nil
-        })
-        val allTtl = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTtlS.toSeq ++ r.cells.flatMap(_.ttlS)
-          case _ => Nil
-        })
-        val header = BigFormat.Header(
-          if (allTs.isEmpty) BigFormat.TimestampEpochUs else allTs.min,
-          if (allLdt.isEmpty) BigFormat.DeletionTimeEpochS else allLdt.min,
-          if (allTtl.isEmpty) BigFormat.TtlEpoch else allTtl.min,
+        val (minTs, minLdt, minTtl) = BigFormat.encodingMinima(parts.toSeq)
+        val header = BigFormat.Header(minTs, minLdt, minTtl,
           keyType = BigFormat.Utf8Type,
           clusteringTypes = Seq(BigFormat.Utf8Type),
           staticColumns = Seq("stitle" -> BigFormat.Utf8Type),
@@ -2874,25 +2819,8 @@ object SSTableBinaryV2 {
           // declared component types
           BigFormat.PartitionData(s"$source:$docId", None, Seq(row))
         }
-        val allTs = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTsUs.toSeq ++ r.cells.map(_.tsUs)
-          case _ => Nil
-        })
-        val allLdt = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessLdtS.toSeq ++ r.cells.flatMap(_.ldtS)
-          case _ => Nil
-        })
-        val allTtl = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTtlS.toSeq ++ r.cells.flatMap(_.ttlS)
-          case _ => Nil
-        })
-        val header = BigFormat.Header(
-          if (allTs.isEmpty) BigFormat.TimestampEpochUs else allTs.min,
-          if (allLdt.isEmpty) BigFormat.DeletionTimeEpochS else allLdt.min,
-          if (allTtl.isEmpty) BigFormat.TtlEpoch else allTtl.min,
+        val (minTs, minLdt, minTtl) = BigFormat.encodingMinima(parts.toSeq)
+        val header = BigFormat.Header(minTs, minLdt, minTtl,
           keyType = keyType,
           clusteringTypes = Seq(BigFormat.Utf8Type),
           staticColumns = Nil,
@@ -3355,27 +3283,8 @@ object SSTableBinaryV2 {
               .map(_._3)
             BigFormat.PartitionData(pk, partDel, atoms.result())
         }
-        // per-file EncodingStats minima over what will be written
-        val allTs = parts.flatMap(p => p.deletionUs.toSeq ++ p.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTsUs.toSeq ++ r.deletionUs.toSeq ++
-              r.cells.map(_.tsUs) ++ r.complexDeletions.map(_._2)
-          case m: BigFormat.MarkerAtom => m.deletions
-        })
-        val allLdt = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessLdtS.toSeq ++ r.cells.flatMap(_.ldtS)
-          case _ => Nil
-        })
-        val allTtl = parts.flatMap(_.atoms.flatMap {
-          case r: BigFormat.RowAtom =>
-            r.livenessTtlS.toSeq ++ r.cells.flatMap(_.ttlS)
-          case _ => Nil
-        })
-        val header = BigFormat.Header(
-          if (allTs.isEmpty) BigFormat.TimestampEpochUs else allTs.min,
-          if (allLdt.isEmpty) BigFormat.DeletionTimeEpochS else allLdt.min,
-          if (allTtl.isEmpty) BigFormat.TtlEpoch else allTtl.min,
+        val (minTs, minLdt, minTtl) = BigFormat.encodingMinima(parts.toSeq)
+        val header = BigFormat.Header(minTs, minLdt, minTtl,
           keyType = typing.map(_.keyType).getOrElse(BigFormat.Utf8Type),
           clusteringTypes = clTypes,
           staticColumns = statics,
@@ -3525,7 +3434,7 @@ object SSTableBinaryV2 {
 
   /** Registered audit `src_sstable_binary`: binary fixture →
     * [[readBinary]] → the SAME per-row_kind aggregation, sharing
-    * `src_sstabledump_tree`'s DuckDB oracle VERBATIM — the fourth IO
+    * `src_sstabledump_tree`'s DuckDB oracle VERBATIM — the binary IO
     * path held to the one ingestion contract. */
   def binaryAudit(spark: SparkSession, sfDir: String): DataFrame =
     binaryAuditV(spark, sfDir, "nb")

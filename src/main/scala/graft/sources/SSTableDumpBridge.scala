@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Ingestion bridge from `sstabledump` JSON to the engine's cell-model
-  * parquet — the documented path for pointing this library at a REAL
-  * Cassandra data directory without a native SSTable reader.
+/** Ingestion bridge from `sstabledump` JSON to the engine's cell
+  * model — the path for pointing this library at a REAL Cassandra
+  * data directory through the public dump format.
   *
   * The reference consumes binary SSTables directly
   * (`Cassandra3TTLRemover.java:86,103` opening `*-Data.db` via the
@@ -17,11 +17,10 @@ import org.apache.spark.sql.types._
   * deletion markers. This bridge maps that public, stable format onto
   * the same cell structs [[graft.model.CellModel]] defines, so the
   * whole operator surface (TTL strip, liveness filters, sorted sink,
-  * partitioned layout) runs unchanged on converted real data:
+  * partitioned layout) runs unchanged on real data:
   *
   *   sstabledump x-Data.db > dump.json      (per SSTable, outside Spark)
-  *   SSTableDumpBridge.convert(spark, dumps, out)
-  *   TtlOps / CellModel.stripAll over spark.read.parquet(out)
+  *   SSTableDumpBridge.stripTtl(SSTableDumpBridge.read(spark, dumps))
   *
   * Liveness mapping (sstabledump field → cell field):
   *   - row `liveness_info.tstamp` (ISO-8601) → writetime_us; a cell's
@@ -69,11 +68,12 @@ import org.apache.spark.sql.types._
   * `Cassandra3TTLRemover.java:185,189`), and the strip/liveness
   * operators only touch the liveness fields, so a lossless string
   * carry is the honest analogue. Scale shape: one JSON file per
-  * SSTable → the multiLine documents are per-file parse units, so a
-  * dump TREE parallelizes file-per-task ([[readTree]]); everything
-  * after `spark.read.json` is a projection + two explodes
-  * (partitions → entries → cells), no shuffle at all until a
-  * downstream operator asks for one.
+  * SSTable, read through ONE reader ([[read]], the streamed
+  * [[SSTableDumpV2]] connector): a dump TREE parallelizes
+  * file-per-task with per-task memory bounded by one partition;
+  * everything after the connector is `from_json` + a projection + two
+  * explodes (partitions → entries → cells), no shuffle at all until
+  * a downstream operator asks for one.
   */
 object SSTableDumpBridge {
 
@@ -111,63 +111,40 @@ object SSTableDumpBridge {
   /** One cell-model row per cell, plus one per deletion marker
     * (row / partition / range-tombstone bound) and one per
     * primary-key-only live row: (partition_key, clustering, row_kind,
-    * name, cell, deletion_us) with `cell` the canonical
+    * name, cell, deletion_us, sstable) with `cell` the canonical
     * `struct<value, writetime_us, ttl_s, expire_us>` every graft
     * operator consumes.
-    */
+    *
+    * `dumpPath` is a dump file or a whole DIRECTORY TREE of them (the
+    * `out/<ks>/<table>/<gen>.json` layout a per-SSTable `sstabledump`
+    * sweep produces, listed recursively). The [[SSTableDumpV2]]
+    * connector streams one partition object at a time, so per-task
+    * memory is bounded by the largest Cassandra partition, not the
+    * dump file, and parallelizes one task per file — the reference's
+    * directory-walk ingestion (`TTLRemoverCLI.java:147-163`)
+    * re-expressed as a distributed read instead of a serial loop. A
+    * file whose top level is not an array fails the read with its
+    * name. `sstable` is the file's last two path components
+    * (`<table>/<gen>.json` in a real dump tree — the S2
+    * filename→identity rule applied to dumps; one component alone
+    * could collide across sibling directories). */
   def read(spark: SparkSession, dumpPath: String): DataFrame =
     bridgeRows(
-      spark.read.schema(dumpSchema).option("multiLine", "true")
-        .json(dumpPath))
-
-  /** [[read]] over a whole DIRECTORY TREE of dump files (the
-    * `out/<ks>/<table>/<gen>.json` layout a per-SSTable `sstabledump`
-    * sweep produces), with per-file identity: each multiLine JSON
-    * document is a per-file parse unit, so N dump files parse as up
-    * to N parallel tasks (Spark packs small files per
-    * `maxPartitionBytes`/`openCostInBytes`; at one-dump-per-SSTable
-    * scale each file is its own task) — the reference's
-    * directory-walk ingestion (`TTLRemoverCLI.java:147-163`)
-    * re-expressed as a distributed read instead of a serial loop.
-    * Adds `sstable` (the file's last two path components —
-    * `<table>/<gen>.json` in a real dump tree — the S2
-    * filename→identity rule applied to dumps; one component alone
-    * could collide across sibling directories) to every bridge row. */
-  def readTree(spark: SparkSession, root: String): DataFrame =
-    bridgeTreeFrame(
-      spark.read.schema(dumpSchema)
-        .option("multiLine", "true")
-        .option("recursiveFileLookup", "true")
-        .json(root))
-
-  /** The tree expansion over any dump-schema frame (batch OR
-    * streaming — the projections/explodes in [[bridgeRows]] are
-    * stream-compatible): adds the file identity and expands. Lets the
-    * streaming ingest path reuse the one expansion definition. */
-  private[graft] def bridgeTreeFrame(raw: DataFrame): DataFrame =
-    bridgeRows(
-      raw.withColumn("_src_file",
-        regexp_extract(col("_metadata.file_path"), "([^/]+/[^/]+)$", 1)),
-      srcFile = true)
-
-  /** [[readTree]] through the [[SSTableDumpV2]] connector instead of
-    * the multiLine JSON source: the V2 reader streams one partition
-    * object at a time (per-task memory bounded by the largest
-    * Cassandra partition, not the dump file — the multiLine source
-    * materializes each whole file), then the SAME from_json schema
-    * and the SAME [[bridgeRows]] expression pipeline produce
-    * bit-identical bridge rows. One semantic definition, two IO
-    * paths; SSTableBridgeSpec pins their frame equality and the
-    * one-task-per-file parallelism. */
-  def readTreeV2(spark: SparkSession, root: String): DataFrame =
-    bridgeRows(
-      spark.read.format("sstabledump").load(root)
+      spark.read.format("sstabledump").load(dumpPath)
         .select(
           from_json(col("partition_json"), dumpSchema).as("p"),
-          col("sstable").as("_src_file"))
+          col("sstable"))
         .select(col("p.partition").as("partition"),
-          col("p.rows").as("rows"), col("_src_file")),
-      srcFile = true)
+          col("p.rows").as("rows"), col("sstable")))
+
+  /** The expansion over a dump-schema frame read by Spark's file
+    * source (the streaming ingest's file stream — the connector is
+    * batch-only): adds the file identity by the same last-two-
+    * components rule as [[read]] and expands. */
+  private[graft] def bridgeTreeFrame(raw: DataFrame): DataFrame =
+    bridgeRows(
+      raw.withColumn("sstable",
+        regexp_extract(col("_metadata.file_path"), "([^/]+/[^/]+)$", 1)))
 
   /** The partition→bridge-row expansion, as ONE expression tree over
     * ONE scan: every input partition computes an ARRAY of output rows
@@ -177,7 +154,7 @@ object SSTableDumpBridge {
     * no subtrees across union branches); here rows are duplicated by
     * explode, never the plan.
     */
-  private def bridgeRows(raw: DataFrame, srcFile: Boolean = false): DataFrame = {
+  private def bridgeRows(raw: DataFrame): DataFrame = {
     val nullCell = lit(null).cast(cellType)
     val nullClust = lit(null).cast("array<string>")
     def out(clustering: Column, rowKind: Column, name: Column,
@@ -190,10 +167,10 @@ object SSTableDumpBridge {
       s"row_kind:string,name:string,cell:$cellType,deletion_us:bigint>>")
 
     val exploded = raw.select(
-      (concat_ws(":", col("partition.key")).as("partition_key") +:
-        col("partition.deletion_info").as("pdel") +:
-        posexplode_outer(col("rows")).as(Seq("pos", "r")) +:
-        (if (srcFile) Seq(col("_src_file").as("sstable")) else Nil)): _*)
+      concat_ws(":", col("partition.key")).as("partition_key"),
+      col("partition.deletion_info").as("pdel"),
+      posexplode_outer(col("rows")).as(Seq("pos", "r")),
+      col("sstable"))
 
     val r = col("r")
     // partition-level deletion: exactly once per partition — on the
@@ -252,20 +229,12 @@ object SSTableDumpBridge {
       .otherwise(emptyOut)
 
     exploded
-      .select(
-        (col("partition_key") +:
-          explode(concat(partDel, rowDel, live, rtDel, unsupported)).as("o") +:
-          (if (srcFile) Seq(col("sstable")) else Nil)): _*)
-      .select(
-        (col("partition_key") +: col("o.clustering") +: col("o.row_kind") +:
-          col("o.name") +: col("o.cell") +: col("o.deletion_us") +:
-          (if (srcFile) Seq(col("sstable")) else Nil)): _*)
+      .select(col("partition_key"),
+        explode(concat(partDel, rowDel, live, rtDel, unsupported)).as("o"),
+        col("sstable"))
+      .select(col("partition_key"), col("o.clustering"), col("o.row_kind"),
+        col("o.name"), col("o.cell"), col("o.deletion_us"), col("sstable"))
   }
-
-  /** Convert a dump (file or directory of dumps) to cell-model
-    * parquet under `outDir` — the bridge's batch entry point. */
-  def convert(spark: SparkSession, dumpPath: String, outDir: String): Unit =
-    read(spark, dumpPath).write.mode("overwrite").parquet(outDir)
 
   /** Fixture epoch for the dump-tree audit: 2021-01-01T00:00:00Z. */
   val TreeBase = 1609459200L
@@ -341,7 +310,7 @@ object SSTableDumpBridge {
     out
   }
 
-  /** Registered dump-tree audit: [[writeTreeFixture]] →  [[readTree]]
+  /** Registered dump-tree audit: [[writeTreeFixture]] → [[read]]
     * → one summary row per row_kind (counts, distinct source files,
     * liveness/deletion sums, value mass). Every number is pinned by a
     * DuckDB oracle computing the same arithmetic straight off the
@@ -353,26 +322,16 @@ object SSTableDumpBridge {
     * few thousand rows — the offset sum stays exactly as
     * timestamp-sensitive (a mis-parse shifts it) while bounded by
     * rows × max(doc_id)+10 seconds at any scale. */
-  def treeAudit(spark: SparkSession, sfDir: String): DataFrame =
-    treeAuditWith(spark, sfDir, readTree)
-
-  /** The same audit through the V2 connector path — the oracle is
-    * shared verbatim with `src_sstabledump_tree`: one semantic
-    * contract, both IO paths held to it. */
-  def treeAuditV2(spark: SparkSession, sfDir: String): DataFrame =
-    treeAuditWith(spark, sfDir, readTreeV2)
-
-  private def treeAuditWith(spark: SparkSession, sfDir: String,
-      reader: (SparkSession, String) => DataFrame): DataFrame = {
+  def treeAudit(spark: SparkSession, sfDir: String): DataFrame = {
     val out = writeTreeFixture(spark, sfDir)
-    val audit = auditFrame(reader(spark, out.toString)).localCheckpoint()
+    val audit = auditFrame(read(spark, out.toString)).localCheckpoint()
     graft.Scratch.delete(out)
     audit
   }
 
   /** The per-row_kind audit aggregation over any bridge-row frame —
-    * ONE definition shared by all four ingestion paths (JSON tree,
-    * DSv2 dump connector, streaming ingest, and the binary big-format
+    * ONE definition shared by every ingestion path (the dump
+    * connector, streaming dump ingest, and the binary big-format
     * connector [[SSTableBinaryV2]]), so every path answers to the
     * same oracle arithmetic. */
   private[graft] def auditFrame(rows: DataFrame): DataFrame = {
@@ -407,26 +366,21 @@ object SSTableDumpBridge {
       .sortWithinPartitions(col("partition_key"), col("clustering"),
         col("name"))
 
-  /** [[stripTtl]] over a CONVERTED parquet directory. */
-  def removeTtl(spark: SparkSession, cellParquetDir: String): DataFrame =
-    stripTtl(spark.read.parquet(cellParquetDir))
-
-  /** Multi-generation merged view of a whole dump tree: the bridge
-    * rows of EVERY dump (SSTable generation) reconcile through
-    * [[graft.ops.TtlOps.lwwMerge]] — highest-writetime-wins per cell,
-    * row/partition tombstones shadowing at-or-before their timestamp,
-    * markers preserved verbatim (they may shadow SSTables outside
-    * this run). This is the step the reference cannot perform: it
+  /** Multi-generation merged view of a bridge-row frame: the rows
+    * of EVERY input generation (dump file or SSTable) reconcile through
+    * [[graft.ops.TtlOps.lwwMerge]] — highest-writetime-wins per cell
+    * (a cell tombstone competing as a version), row/partition
+    * tombstones shadowing at-or-before their timestamp, markers
+    * preserved (they may shadow SSTables outside this run). This is the step the reference cannot perform: it
     * rewrites each SSTable in isolation
     * (`Cassandra3TTLRemover.java:86-103` loops files independently)
     * and leaves reconciliation to the Cassandra server; here a
     * directory of generations collapses to the table's effective
     * state in one shuffle. TTL metadata does not survive (value +
     * writetime only) — the merge IS the strip. */
-  def mergeTree(spark: SparkSession, root: String,
-      reader: (SparkSession, String) => DataFrame = readTree): DataFrame =
+  def mergeTree(rows: DataFrame): DataFrame =
     graft.ops.TtlOps.lwwMerge(
-      reader(spark, root).select(
+      rows.select(
         col("partition_key"), col("clustering"), col("row_kind"),
         col("name"), col("cell.value").as("value"),
         col("cell.writetime_us").as("writetime_us"), col("deletion_us")),
@@ -435,15 +389,14 @@ object SSTableDumpBridge {
   /** [[mergeTree]] → sorted `out/<ks>/<table>/` layout — the CLI's
     * `--merge lww` execution path; same write-side `observe` count
     * discipline as [[removeTtlToDir]]. */
-  def mergeTtlToDir(spark: SparkSession, dumpPath: String, outDir: String,
+  def mergeTtlToDir(rows: DataFrame, outDir: String,
       keyspace: String, table: String,
-      saveMode: String = "errorifexists",
-      reader: (SparkSession, String) => DataFrame = readTree): Long = {
+      saveMode: String = "errorifexists"): Long = {
     val written = org.apache.spark.sql.Observation()
     // no repartition here: lwwMerge's output is already
     // hash-partitioned on partition_key (its one exchange), so the
     // sorted-sink shape only needs the within-partition sort
-    mergeTree(spark, dumpPath, reader)
+    mergeTree(rows)
       .sortWithinPartitions(col("partition_key"), col("clustering"),
         col("name"))
       .withColumn("keyspace", lit(keyspace))
@@ -455,7 +408,7 @@ object SSTableDumpBridge {
   }
 
   /** EXPORT: bridge-row frame → sstabledump JSON tree — the inverse
-    * of [[readTree]], so the engine EMITS the same public format it
+    * of [[read]], so the engine EMITS the same public format it
     * ingests (binary in → dump out closes the interop loop: any tool
     * that consumes `sstabledump` output consumes this). One dump file
     * per distinct `sstable` value, NAMED exactly after it (re-reading
@@ -475,7 +428,7 @@ object SSTableDumpBridge {
     * (`raise_error`) — an export that silently dropped a tombstone
     * would resurrect data in whatever re-ingests it. Cells carry
     * their EXPLICIT tstamp/ttl (no row-default compression), which
-    * is why readTree(writeTree(frame)) reproduces the frame exactly.
+    * is why read(writeTree(frame)) reproduces the frame exactly.
     * Timestamps render with a literal 'Z', so the session MUST be
     * UTC (all mains here are) — enforced loudly below, because
     * `date_format` renders in the session zone: a non-UTC session
@@ -627,23 +580,22 @@ object SSTableDumpBridge {
     val in = SSTableBinaryV2.binaryFixtureShared(spark, sfDir)
     val out = graft.Scratch.dir("graft-dumpexport-")
     writeTree(SSTableBinaryV2.readBinary(spark, in), out.toString)
-    val audit = auditFrame(readTree(spark, out.toString))
+    val audit = auditFrame(read(spark, out.toString))
       .localCheckpoint()
     graft.Scratch.delete(out)
     audit
   }
 
-  /** Whole lifecycle from raw sstabledump JSON: read → strip →
-    * sorted, `out/<ks>/<table>/`-laid-out parquet write. Returns the
+  /** Whole lifecycle over a bridge-row frame: strip → sorted,
+    * `out/<ks>/<table>/`-laid-out parquet write. Returns the
     * written row count (write-side `observe`, same no-read-back
     * discipline as [[graft.Pipeline.removeTtl]]) — the CLI's
     * `--format sstabledump` entry point. */
-  def removeTtlToDir(spark: SparkSession, dumpPath: String, outDir: String,
+  def removeTtlToDir(rows: DataFrame, outDir: String,
       keyspace: String, table: String,
-      saveMode: String = "errorifexists",
-      reader: (SparkSession, String) => DataFrame = read): Long = {
+      saveMode: String = "errorifexists"): Long = {
     val written = org.apache.spark.sql.Observation()
-    stripTtl(reader(spark, dumpPath))
+    stripTtl(rows)
       .withColumn("keyspace", lit(keyspace))
       .withColumn("table_name", lit(table))
       .observe(written, count(lit(1)).as("rows"))

@@ -19,17 +19,17 @@ import org.apache.spark.util.SerializableConfiguration
 /** DataSourceV2 connector for `sstabledump` JSON trees —
   * `spark.read.format("sstabledump").load(root)`.
   *
-  * Why a connector when [[SSTableDumpBridge.readTree]] already reads
-  * the tree: Spark's multiLine JSON source treats EACH FILE as one
-  * parse unit held in memory — a faithful `sstabledump` of one large
-  * SSTable is one multi-GB JSON array, and the whole array
-  * materializes in a single task before the first row emerges. This
-  * reader streams Jackson tokens instead: the top-level array is
-  * never materialized, one PARTITION OBJECT at a time is read into a
-  * row, so per-task memory is bounded by the largest Cassandra
-  * partition (the same bound the reference's own scanner has,
-  * `Cassandra3TTLRemover.java:86-103` — it streams partitions off
-  * the SSTable, never the table). Parallelism is per dump file (one
+  * The one batch reader behind [[SSTableDumpBridge.read]]. Why a
+  * connector rather than Spark's multiLine JSON source: that source
+  * treats EACH FILE as one parse unit held in memory — a faithful
+  * `sstabledump` of one large SSTable is one multi-GB JSON array, and
+  * the whole array would materialize in a single task before the
+  * first row emerges. This reader streams Jackson tokens instead: the
+  * top-level array is never materialized, one PARTITION OBJECT at a
+  * time is read into a row, so per-task memory is bounded by the
+  * largest Cassandra partition (the same bound the reference's own
+  * scanner has, `Cassandra3TTLRemover.java:86-103` — it streams
+  * partitions off the SSTable, never the table). Parallelism is per dump file (one
   * InputPartition each, sorted for determinism), matching the
   * reference's file-per-unit directory sweep
   * (`TTLRemoverCLI.java:147-163`).
@@ -38,10 +38,10 @@ import org.apache.spark.util.SerializableConfiguration
   * (`sstable`, `partition_json`): IO and memory discipline live in
   * the connector, while the cell-model semantics — liveness, TTL,
   * deletion kinds, range-tombstone bounds — stay in the ONE
-  * battle-tested Catalyst expression pipeline
-  * ([[SSTableDumpBridge.bridgeRows]]) that both ingestion paths
-  * share. Column pruning is pushed down (asking only for `sstable`
-  * skips JSON re-serialization entirely).
+  * Catalyst expression pipeline ([[SSTableDumpBridge.bridgeRows]])
+  * that the streaming dump ingest shares. Column pruning is pushed
+  * down (asking only for `sstable` skips JSON re-serialization
+  * entirely).
   */
 class SSTableDumpV2 extends TableProvider with DataSourceRegister {
   override def shortName(): String = "sstabledump"
@@ -132,8 +132,9 @@ object SSTableDumpV2 {
     * array `sstabledump` emits and yields one row per partition
     * object. Memory is bounded by one object — the parser never holds
     * the array. The `sstable` identity is the file's last two path
-    * components (the S2 filename→identity rule, matching
-    * [[SSTableDumpBridge.readTree]]). */
+    * components (the S2 filename→identity rule, the same one
+    * [[SSTableDumpBridge.bridgeTreeFrame]] applies to streamed
+    * dumps). */
   private class DumpPartitionReader(file: String, cols: Array[String],
       conf: org.apache.hadoop.conf.Configuration)
       extends PartitionReader[InternalRow] {

@@ -1696,10 +1696,10 @@ class SSTableBinarySpec extends SparkSpec {
       // is erased by the strip itself, so the frames must be equal
       assert(viaJson.exceptAll(viaBin).count() === 0)
       assert(viaBin.exceptAll(viaJson).count() === 0)
-      // binary input decodes directly: a --reader choice is a
-      // contradiction and parse-time rejected
+      // one reader per format: there is no reader choice to make
       assert(RemoverCli.parse(Array("--in", "a", "--out", "b",
-        "--table", "t", "--format", "sstable", "--reader", "v2")).isLeft)
+        "--table", "t", "--format", "sstable", "--reader", "v2")) ===
+        Left("unknown flag --reader"))
     } finally { Scratch.delete(binDir); Scratch.delete(jsonDir) }
   }
 
@@ -2112,7 +2112,7 @@ class SSTableBinarySpec extends SparkSpec {
         "--sink", "sstabledump"))
         .fold(e => fail(s"parse failed: $e"), identity)
       RemoverCli.run(spark, args)
-      val back = SSTableDumpBridge.readTree(spark, out1)
+      val back = SSTableDumpBridge.read(spark, out1)
       assert(back.select("sstable").distinct().count()
         === SSTableDumpBridge.TreeFiles)
       assert(back.filter(col("cell.ttl_s").isNotNull).count() === 0)
@@ -2124,7 +2124,7 @@ class SSTableBinarySpec extends SparkSpec {
         "--sink", "sstabledump", "--merge", "lww"))
         .fold(e => fail(s"parse failed: $e"), identity)
       RemoverCli.run(spark, args2)
-      val merged = SSTableDumpBridge.readTree(spark, out2)
+      val merged = SSTableDumpBridge.read(spark, out2)
       assert(merged.select("sstable").distinct().count() === 1)
       assert(merged.count() > 0)
       // validation: dump export needs the cell model; no --compress

@@ -287,7 +287,7 @@ class PropertySpec extends SparkSpec {
       try {
         graft.sources.SSTableDumpBridge.writeTree(frame, out.toString)
         val back = graft.sources.SSTableDumpBridge
-          .readTree(spark, out.toString)
+          .read(spark, out.toString)
         assert(back.exceptAll(frame).count() === 0,
           s"seed $seed: re-read invented rows")
         assert(frame.exceptAll(back).count() === 0,

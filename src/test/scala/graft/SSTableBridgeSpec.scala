@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 /** Round-trip of the sstabledump-JSON ingestion bridge: a fixture in
   * the exact shape `sstabledump` emits (array of partitions → rows →
   * cells, ISO-8601 liveness timestamps, optional per-cell overrides,
-  * row tombstones) converts to cell-model parquet, and the TTL-removal
-  * pipeline runs over the converted directory preserving every row.
+  * row tombstones) reads to cell-model rows, and the TTL-removal
+  * pipeline runs over them preserving every row.
   */
 class SSTableBridgeSpec extends SparkSpec {
 
@@ -169,9 +169,8 @@ class SSTableBridgeSpec extends SparkSpec {
   }
 
   test("deletion markers and PK liveness ride through the strip pipeline") {
-    val out = graft.Scratch.dir("graft-sstable-del-out-").toString
-    SSTableDumpBridge.convert(spark, writeDeletionDump(), out)
-    val stripped = SSTableDumpBridge.removeTtl(spark, out).localCheckpoint()
+    val stripped = SSTableDumpBridge.stripTtl(
+      SSTableDumpBridge.read(spark, writeDeletionDump())).localCheckpoint()
     // nothing lost: 1 part-del + 1 part-del + 1 cell + 2 pk + 2 bounds + 1 unsupported
     assert(stripped.count() === 8)
     // markers verbatim (null cells stayed null)
@@ -202,14 +201,10 @@ class SSTableBridgeSpec extends SparkSpec {
   test("dump TREE reads parallelize per file and keep per-file identity") {
     val out = SSTableDumpBridge.writeTreeFixture(spark, sfDir)
     try {
-      // one task per dump file when split packing is disabled: multiLine
-      // documents are non-splittable parse units, so N files can always
-      // fan out to N tasks — the witness that a directory-scale ingest
-      // never serializes through one parser
-      val s2 = spark.newSession()
-      s2.conf.set("spark.sql.files.maxPartitionBytes", "1")
-      s2.conf.set("spark.sql.files.openCostInBytes", "0")
-      val df = SSTableDumpBridge.readTree(s2, out.toString)
+      // one task per dump file: N files fan out to N tasks — the
+      // witness that a directory-scale ingest never serializes
+      // through one parser
+      val df = SSTableDumpBridge.read(spark, out.toString)
       assert(df.rdd.getNumPartitions === SSTableDumpBridge.TreeFiles,
         "expected one scan task per dump file")
 
@@ -271,11 +266,9 @@ class SSTableBridgeSpec extends SparkSpec {
     assert(ts.isNullAt(ts.fieldIndex("cell")))
   }
 
-  test("convert → removeTtl preserves rows and strips only liveness") {
-    val out = graft.Scratch.dir("graft-sstable-out-").toString
-    SSTableDumpBridge.convert(spark, writeDump(), out)
-
-    val stripped = SSTableDumpBridge.removeTtl(spark, out)
+  test("read → stripTtl preserves rows and strips only liveness") {
+    val stripped = SSTableDumpBridge.stripTtl(
+      SSTableDumpBridge.read(spark, writeDump()))
     assert(stripped.count() === 4, "rows lost in the strip pipeline")
     // every live cell: value + writetime intact, ttl/expiration gone
     val live = stripped.filter(col("row_kind") === "ROW")
@@ -386,38 +379,72 @@ class SSTableBridgeSpec extends SparkSpec {
       "--format", "sstabledump", "--merge", "zzz")).isLeft)
   }
 
-  test("RemoverCli --reader v2 runs the lifecycle through the connector, output-identical") {
+  test("RemoverCli reads nested dump trees; --reader is an unknown flag") {
+    // the tree fixture nests every dump one directory deep
+    // (file_id=N/part-*): an unmerged run reads all of them
     val dumpDir = SSTableDumpBridge.writeTreeFixture(spark, sfDir)
     try {
-      def runWith(reader: String): org.apache.spark.sql.DataFrame = {
-        val out = Scratch.dir("graft-cli-v2-").toString + "/o"
-        val argv = Array("--in", dumpDir.toString, "--out", out,
-          "--table", "t", "--format", "sstabledump",
-          "--reader", reader)
-        val args = RemoverCli.parse(argv)
-          .fold(e => fail(s"parse failed: $e"), identity)
-        RemoverCli.run(spark, args)
-        spark.read.parquet(out).localCheckpoint()
-      }
-      val viaJson = runWith("json")
-      val viaV2 = runWith("v2")
-      assert(viaV2.count() === viaJson.count())
-      assert(viaJson.exceptAll(viaV2).count() === 0)
-      assert(viaV2.exceptAll(viaJson).count() === 0)
-      // the reader choice only exists for the dump format
+      val out = Scratch.dir("graft-cli-tree-").toString + "/o"
+      val args = RemoverCli.parse(Array("--in", dumpDir.toString,
+        "--out", out, "--table", "t", "--format", "sstabledump"))
+        .fold(e => fail(s"parse failed: $e"), identity)
+      RemoverCli.run(spark, args)
+      val cols = Seq("partition_key", "clustering", "row_kind", "name",
+        "cell", "deletion_us").map(col)
+      val viaCli = spark.read.parquet(out).select(cols: _*)
+        .localCheckpoint()
+      val direct = SSTableDumpBridge.stripTtl(
+        SSTableDumpBridge.read(spark, dumpDir.toString)).select(cols: _*)
+      assert(viaCli.count() > 0)
+      assert(viaCli.exceptAll(direct).count() === 0)
+      assert(direct.exceptAll(viaCli).count() === 0)
+      // one dump reader, so no reader choice: --reader is unknown
       assert(RemoverCli.parse(Array("--in", "a", "--out", "b",
-        "--table", "t", "--reader", "v2")).isLeft)
-      assert(RemoverCli.parse(Array("--in", "a", "--out", "b",
-        "--table", "t", "--format", "sstabledump",
-        "--reader", "zzz")).isLeft)
+        "--table", "t", "--format", "sstabledump", "--reader", "v2")) ===
+        Left("unknown flag --reader"))
     } finally Scratch.delete(dumpDir)
+  }
+
+  test("RemoverCli --format sstabledump fails loudly on a non-array dump, naming the file") {
+    val in = graft.Scratch.dir("graft-sstable-bad-")
+    // a top-level OBJECT, not the array sstabledump emits: it must
+    // not pass as a one-partition dump
+    Files.writeString(in.resolve("mc-9-big-Data.json"),
+      """{"partition":{"key":["x"],"position":0},"rows":[{"type":"row",""" +
+        """"position":1,"clustering":["c"],"liveness_info":""" +
+        """{"tstamp":"2021-01-01T00:00:00Z","ttl":60},""" +
+        """"cells":[{"name":"v","value":"1"}]}]}""")
+    val out = graft.Scratch.dir("graft-sstable-bad-out-").toString + "/o"
+    val args = RemoverCli.parse(Array("--in", in.toString, "--out", out,
+      "--table", "t", "--format", "sstabledump"))
+      .fold(e => fail(s"parse failed: $e"), identity)
+    val ex = intercept[Exception](RemoverCli.run(spark, args))
+    val messages = Iterator.iterate[Throwable](ex)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage)).toSeq
+    assert(messages.exists(_.contains("mc-9-big-Data.json")),
+      s"the failure does not name the file: ${messages.mkString(" | ")}")
+    assert(messages.exists(_.contains("expected a top-level JSON array")))
+  }
+
+  test("RemoverCli usage text names exactly the flags the parser accepts") {
+    val named = "--([a-z][a-z-]*)".r.findAllMatchIn(RemoverCli.Usage)
+      .map(_.group(1)).toSet
+    assert(RemoverCli.Flags -- named === Set.empty,
+      "flags missing from the usage text")
+    assert(named -- RemoverCli.Flags === Set.empty,
+      "usage text names flags the parser rejects")
   }
 
   test("V2 connector: streamed tree read is frame-identical to the multiLine path") {
     val out = SSTableDumpBridge.writeTreeFixture(spark, sfDir)
     try {
-      val a = SSTableDumpBridge.readTree(spark, out.toString)
-      val b = SSTableDumpBridge.readTreeV2(spark, out.toString)
+      // reference: Spark's multiLine JSON source (whole file per
+      // parse unit) through the same expansion
+      val a = SSTableDumpBridge.bridgeTreeFrame(
+        spark.read.schema(SSTableDumpBridge.dumpSchema)
+          .option("multiLine", "true").option("recursiveFileLookup", "true")
+          .json(out.toString))
+      val b = SSTableDumpBridge.read(spark, out.toString)
       assert(b.schema === a.schema)
       // symmetric difference empty = identical multisets (rows are
       // unique here: every bridge row carries its partition key)
@@ -426,7 +453,7 @@ class SSTableBridgeSpec extends SparkSpec {
     } finally Scratch.delete(out)
   }
 
-  test("dump export: readTree(writeTree(frame)) is the EXACT frame; non-expressible kinds refuse; bytes deterministic") {
+  test("dump export: read(writeTree(frame)) is the EXACT frame; non-expressible kinds refuse; bytes deterministic") {
     import org.apache.spark.sql.functions._
     val in = graft.sources.SSTableBinaryV2.writeBinaryFixture(spark, sfDir)
     val out = Scratch.dir("graft-exportspec-")
@@ -435,7 +462,7 @@ class SSTableBridgeSpec extends SparkSpec {
       val frame = graft.sources.SSTableBinaryV2
         .readBinary(spark, in.toString).localCheckpoint()
       SSTableDumpBridge.writeTree(frame, out.toString)
-      val back = SSTableDumpBridge.readTree(spark, out.toString)
+      val back = SSTableDumpBridge.read(spark, out.toString)
         .localCheckpoint()
       // exact round trip, not just aggregate equality: every column
       // including the sstable identity (files are NAMED after it)

@@ -316,9 +316,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming dump ingest lands on the batch tree audit exactly") {
-    // three ingestion paths, one semantic contract: the paced
-    // AvailableNow stream's final Complete emission must equal the
-    // batch treeAudit frame row for row
+    // batch and streaming dump ingestion, one semantic contract: the
+    // paced AvailableNow stream's final Complete emission must equal
+    // the batch treeAudit frame row for row
     val stream = graft.streaming.StreamingOps
       .dumpIngest(spark, sfDir).localCheckpoint()
     val batch = graft.sources.SSTableDumpBridge

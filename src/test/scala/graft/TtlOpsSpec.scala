@@ -196,6 +196,43 @@ class TtlOpsSpec extends SparkSpec {
       TtlOps.lwwMergeSkewSafe(TtlOps.lwwRangeFixture(spark, sfDir)))
   }
 
+  test("LWW: cell tombstones compete with live versions (older, newer, tie)") {
+    import spark.implicits._
+    // one slot per ordering: an OLDER tombstone loses to a newer live
+    // cell; a NEWER tombstone hides every older version (and a still
+    // older tombstone); a writetime TIE goes to the tombstone
+    val cells = Seq(
+      ("k", "c", "ROW", "older", "new", Some(200L), None),
+      ("k", "c", "ROW", "older", "old", Some(50L), None),
+      ("k", "c", "CELL_DELETION", "older", null, Some(100L), Some(100L)),
+      ("k", "c", "ROW", "newer", "old", Some(100L), None),
+      ("k", "c", "CELL_DELETION", "newer", null, Some(150L), Some(150L)),
+      ("k", "c", "CELL_DELETION", "newer", null, Some(200L), Some(200L)),
+      ("k", "c", "ROW", "tie", "x", Some(100L), None),
+      ("k", "c", "CELL_DELETION", "tie", null, Some(100L), Some(100L)))
+      .toDF("partition_key", "clustering", "row_kind", "name", "value",
+        "writetime_us", "deletion_us")
+    val winners = TtlOps.lwwMerge(cells)
+    assert(winners.collect().map(r =>
+      (r.getAs[String]("name"), r.getAs[String]("value"),
+        r.getAs[Long]("writetime_us"))).toSet ===
+      Set(("older", "new", 200L)))
+    // with markers kept: each slot's newest tombstone survives only
+    // where it won
+    val kept = TtlOps.lwwMerge(cells, keepMarkers = true).collect()
+    assert(kept.filter(_.getAs[String]("row_kind") == "CELL_DELETION")
+      .map(r => (r.getAs[String]("name"), r.getAs[Long]("deletion_us")))
+      .toSet === Set(("newer", 200L), ("tie", 100L)))
+    assert(kept.filter(_.getAs[String]("row_kind") == "ROW")
+      .map(_.getAs[String]("value")).toSeq === Seq("new"))
+    // both physical strategies (and the dial forced onto the skew-safe
+    // one) apply the same rule
+    for (other <- Seq(TtlOps.lwwMergeSkewSafe(cells),
+        TtlOps.lwwMergeAuto(cells, hotThreshold = 0L)))
+      assert(other.exceptAll(winners).isEmpty &&
+        winners.exceptAll(other).isEmpty)
+  }
+
   test("lwwAsOf: tombstones in the future of the cut do not shadow yet") {
     val asof = TtlOps.lwwAsOfAudit(spark, sfDir)
       .select(col("partition_key")).distinct()
