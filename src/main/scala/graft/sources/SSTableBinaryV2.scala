@@ -1614,18 +1614,88 @@ object SSTableBinaryV2 {
   // fixture + registered audit
   // =====================================================================
 
-  /** The fixture's serialization header shape (documents-table dump:
-    * string key, one string clustering column, `len`/`src` text
-    * cells). Stats minima are computed per file from the actual
-    * encoded values, as Cassandra's EncodingStats collector does. */
-  private def fixtureHeader(minTsUs: Long, minLdtS: Int,
-      minTtlS: Int): BigFormat.Header =
-    BigFormat.Header(minTsUs, minLdtS, minTtlS,
-      keyType = BigFormat.Utf8Type,
+  /** Whole-file writes under `dir` through the Hadoop FS of `conf`:
+    * the returned `write(name, bytes)` creates (overwriting)
+    * `dir/name`. The one file path of the fixture writers and of the
+    * sink's staging write. */
+  private[sources] def fileWriter(dir: String,
+      conf: org.apache.hadoop.conf.Configuration)
+      : (String, Array[Byte]) => Unit = {
+    val fs = FileSystem.get(java.net.URI.create(dir), conf)
+    (name, bytes) => {
+      val os = fs.create(new HPath(dir, name), true)
+      try os.write(bytes) finally os.close()
+    }
+  }
+
+  /** The documents-fixture driver: the documents table's
+    * `(doc_id, source, n_chars)` rows, one task per file id
+    * `doc_id % TreeFiles`, each handed to `encode(gen, docs, write)`
+    * with generation `file id + 1`, its rows sorted by doc_id, and a
+    * [[fileWriter]] under `<out>/documents`. Encoding runs
+    * DISTRIBUTEDLY, the codec being the honest `mapGroups` boundary —
+    * the same place the multimodal ops draw it; the data never leaves
+    * executors. Caller owns the returned dir's deletion. */
+  private def writeDocFixture(spark: SparkSession, sfDir: String,
+      prefix: String)(encode: (Int, Array[(Long, String, Long)],
+        (String, Array[Byte]) => Unit) => Unit): java.nio.file.Path = {
+    import spark.implicits._
+    val out = graft.Scratch.dir(prefix)
+    val dir = s"$out/documents"
+    val hconf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    val nFiles = SSTableDumpBridge.TreeFiles
+    graft.Tables.load(spark, sfDir, "documents")
+      .select(col("doc_id").cast("long"), col("source"),
+        col("n_chars").cast("long"))
+      .as[(Long, String, Long)]
+      .groupByKey { case (docId, _, _) => (docId % nFiles).toInt }
+      .mapGroups { (fileId, docs) =>
+        encode(fileId + 1, docs.toArray.sortBy(_._1),
+          fileWriter(dir, hconf.value.value))
+        fileId
+      }
+      .collect()
+    out
+  }
+
+  /** The nb-fixture generation tail: a serialization header (one
+    * string clustering column) whose EncodingStats minima are computed
+    * from `parts` as Cassandra's collector does, Data.db — with
+    * `compression`, chunked the default-config Cassandra way (16 KiB
+    * chunks, the 4.1 default chunk_length_in_kb) beside a
+    * CompressionInfo.db — then Statistics.db carrying the key
+    * sketch. */
+  private def writeNbFixture(parts: Seq[BigFormat.PartitionData],
+      gen: Int, write: (String, Array[Byte]) => Unit,
+      regularColumns: Seq[(String, String)],
+      staticColumns: Seq[(String, String)] = Nil,
+      keyType: String = BigFormat.Utf8Type,
+      version: String = "nb",
+      compression: Option[String] = None): Unit = {
+    val (minTs, minLdt, minTtl) = BigFormat.encodingMinima(parts)
+    val header = BigFormat.Header(minTs, minLdt, minTtl, keyType,
       clusteringTypes = Seq(BigFormat.Utf8Type),
-      staticColumns = Nil,
-      regularColumns = Seq(
-        "len" -> BigFormat.Utf8Type, "src" -> BigFormat.Utf8Type))
+      staticColumns = staticColumns,
+      regularColumns = regularColumns)
+    val dataBytes = BigFormat.writeDataFile(parts, header)
+    compression match {
+      case Some(comp) =>
+        val (cbytes, meta) =
+          CompressedData.compress(dataBytes, 16 * 1024, comp)
+        write(s"$version-$gen-big-Data.db", cbytes)
+        write(s"$version-$gen-big-CompressionInfo.db",
+          CompressedData.writeMeta(meta,
+            CompressedData.versionHasMaxCompressedSize(version)))
+      case None =>
+        write(s"$version-$gen-big-Data.db", dataBytes)
+    }
+    write(s"$version-$gen-big-Statistics.db",
+      BigFormat.writeStats(header, version,
+        compaction = Some(KeyCardinality.writeComponent(
+          KeyCardinality.sketchOf(parts.iterator.map(p =>
+            BigFormat.encodeValue(keyType, p.key)))))))
+  }
 
   /** Binary twin of [[SSTableDumpBridge.writeTreeFixture]]: the SAME
     * logical content (each document one partition in file
@@ -1637,94 +1707,46 @@ object SSTableBinaryV2 {
     * One genuinely binary divergence, invisible to the audit: a TTL of
     * 0 is `LivenessInfo.NO_TTL` on disk (no such thing as an expiring
     * cell with ttl=0), so `doc_id % 100 == 0` rows decode ttl as NULL
-    * where the JSON path reads 0 — identical under SUM.
-    *
-    * Encoding runs DISTRIBUTEDLY: one task per output SSTable
-    * (groupByKey on file id), the [[BigFormat]] codec being the
-    * honest `mapGroups` boundary — the same place the multimodal ops
-    * draw it — and each task writes its two files through the session
-    * Hadoop FS. Caller owns the returned dir's deletion. */
+    * where the JSON path reads 0 — identical under SUM. */
   def writeBinaryFixture(spark: SparkSession, sfDir: String,
       version: String = "nb",
       compression: Option[String] = None): java.nio.file.Path = {
-    import spark.implicits._
-    val out = graft.Scratch.dir("graft-bintable-")
-    val outStr = out.toString
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val base = SSTableDumpBridge.TreeBase
-    val nFiles = SSTableDumpBridge.TreeFiles
-    graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long"), col("source"),
-        col("n_chars").cast("long"))
-      .as[(Long, String, Long)]
-      .groupByKey { case (docId, _, _) => (docId % nFiles).toInt }
-      .mapGroups { (fileId, docs) =>
-        val sorted = docs.toArray.sortBy(_._1)
-        val parts = sorted.map { case (docId, source, nChars) =>
-          val kind = docId % 10
-          val wtSec = base + docId
-          val wtUs = wtSec * 1000000L
-          val rowTtl =
-            if (docId % 2 == 0 && docId % 100 != 0) Some((docId % 100).toInt)
-            else None
-          val rowLdt = rowTtl.map(t => (wtSec + t).toInt)
-          val clustering = Seq(Some(s"c$docId"))
-          val key = docId.toString
-          if (kind == 3)
-            BigFormat.PartitionData(key, Some(wtUs), Seq.empty)
-          else if (kind == 7)
-            BigFormat.PartitionData(key, None, Seq(
-              BigFormat.RowAtom(clustering, None, None, None,
-                Some(wtUs), Nil)))
-          else if (kind == 5)
-            BigFormat.PartitionData(key, None, Seq(
-              BigFormat.RowAtom(clustering, Some(wtUs), rowTtl, rowLdt,
-                None, Nil)))
-          else
-            BigFormat.PartitionData(key, None, Seq(
-              BigFormat.RowAtom(clustering, Some(wtUs), rowTtl, rowLdt,
-                None, Seq(
-                  BigFormat.CellAtom("len", wtUs, rowTtl, rowLdt,
-                    Some(nChars.toString), deleted = false),
-                  BigFormat.CellAtom("src", wtUs + 10000000L, rowTtl,
-                    rowTtl.map(t => (wtSec + 10 + t).toInt),
-                    Some(source), deleted = false)))))
-        }
-        val (minTs, minLdt, minTtl) = BigFormat.encodingMinima(parts.toSeq)
-        val header = fixtureHeader(minTs, minLdt, minTtl)
-        val gen = fileId + 1
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        val dir = new HPath(s"$outStr/documents")
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(new HPath(dir, name), true)
-          try os.write(bytes) finally os.close()
-        }
-        val dataBytes = BigFormat.writeDataFile(parts.toSeq, header)
-        compression match {
-          case Some(comp) =>
-            // the default-config Cassandra shape: chunked LZ4 with a
-            // CompressionInfo.db sibling (16 KiB chunks, the 4.1
-            // default chunk_length_in_kb)
-            val (cbytes, meta) =
-              CompressedData.compress(dataBytes, 16 * 1024, comp)
-            write(s"$version-$gen-big-Data.db", cbytes)
-            write(s"$version-$gen-big-CompressionInfo.db",
-              CompressedData.writeMeta(meta,
-                CompressedData.versionHasMaxCompressedSize(version)))
-          case None =>
-            write(s"$version-$gen-big-Data.db", dataBytes)
-        }
-        write(s"$version-$gen-big-Statistics.db",
-          BigFormat.writeStats(header, version,
-            compaction = Some(KeyCardinality.writeComponent(
-              KeyCardinality.sketchOf(parts.iterator.map(p =>
-                BigFormat.encodeValue(header.keyType, p.key)))))))
-        (fileId, parts.length)
+    writeDocFixture(spark, sfDir, "graft-bintable-") { (gen, docs, write) =>
+      val parts = docs.map { case (docId, source, nChars) =>
+        val kind = docId % 10
+        val wtSec = base + docId
+        val wtUs = wtSec * 1000000L
+        val rowTtl =
+          if (docId % 2 == 0 && docId % 100 != 0) Some((docId % 100).toInt)
+          else None
+        val rowLdt = rowTtl.map(t => (wtSec + t).toInt)
+        val clustering = Seq(Some(s"c$docId"))
+        val key = docId.toString
+        if (kind == 3)
+          BigFormat.PartitionData(key, Some(wtUs), Seq.empty)
+        else if (kind == 7)
+          BigFormat.PartitionData(key, None, Seq(
+            BigFormat.RowAtom(clustering, None, None, None,
+              Some(wtUs), Nil)))
+        else if (kind == 5)
+          BigFormat.PartitionData(key, None, Seq(
+            BigFormat.RowAtom(clustering, Some(wtUs), rowTtl, rowLdt,
+              None, Nil)))
+        else
+          BigFormat.PartitionData(key, None, Seq(
+            BigFormat.RowAtom(clustering, Some(wtUs), rowTtl, rowLdt,
+              None, Seq(
+                BigFormat.CellAtom("len", wtUs, rowTtl, rowLdt,
+                  Some(nChars.toString), deleted = false),
+                BigFormat.CellAtom("src", wtUs + 10000000L, rowTtl,
+                  rowTtl.map(t => (wtSec + 10 + t).toInt),
+                  Some(source), deleted = false)))))
       }
-      .collect() // 4-row fixture manifest; the data never leaves executors
-    out
+      writeNbFixture(parts.toSeq, gen, write,
+        Seq("len" -> BigFormat.Utf8Type, "src" -> BigFormat.Utf8Type),
+        version = version, compression = compression)
+    }
   }
 
   /** The bridge-row frame off a big-format data directory — the
@@ -1911,167 +1933,130 @@ object SSTableBinaryV2 {
     * (the era the reference reads at `NoTTLReader.java:343,623`). */
   def writeOldFixture(spark: SparkSession,
       sfDir: String, compress: Boolean = false): java.nio.file.Path = {
-    import spark.implicits._
-    val out = graft.Scratch.dir("graft-katable-")
-    val outStr = out.toString
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val base = SSTableDumpBridge.TreeBase
-    val nFiles = SSTableDumpBridge.TreeFiles
     val schema = OldFormat.schemaOfCql(
       graft.model.CqlSchema.parse(Cql2x)
         .fold(e => throw new IllegalArgumentException(e), identity))
-    graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long"), col("source"),
-        col("n_chars").cast("long"))
-      .as[(Long, String, Long)]
-      .groupByKey { case (docId, _, _) => (docId % nFiles).toInt }
-      .mapGroups { (fileId, docs) =>
-        val parts = docs.toArray.sortBy(_._1).map {
-          case (docId, source, nChars) =>
-            val kind = docId % 10
-            val wtSec = base + docId
-            val wtUs = wtSec * 1000000L
-            val ttl =
-              if (docId % 2 == 0 && docId % 100 != 0)
-                Some((docId % 100).toInt)
-              else None
-            val cl = Seq(s"c$docId")
-            val key = docId.toString
-            def marker = OldFormat.Cell2(cl, "", wtUs, ttl,
-              ttl.map(t => (wtSec + t).toInt), Some(""), deleted = false,
-              counter = false)
-            if (kind == 3)
-              OldFormat.Partition2(key, Some(wtUs), Nil)
-            else if (kind == 7)
-              OldFormat.Partition2(key, None, Seq(
-                OldFormat.Tombstone2(cl, startInclusive = true,
-                  cl, endInclusive = true, wtUs)))
-            else if (kind == 5)
-              OldFormat.Partition2(key, None, Seq(marker))
-            else
-              OldFormat.Partition2(key, None, Seq(
-                marker,
-                OldFormat.Cell2(cl, "len", wtUs, ttl,
-                  ttl.map(t => (wtSec + t).toInt), Some(nChars.toString),
-                  deleted = false, counter = false),
-                OldFormat.Cell2(cl, "src", wtUs + 10000000L, ttl,
-                  ttl.map(t => (wtSec + 10 + t).toInt), Some(source),
-                  deleted = false, counter = false)))
-        }
-        val gen = fileId + 1
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(
-            new HPath(s"$outStr/documents/graft-documents-ka-$gen-$name"),
-            true)
-          try os.write(bytes) finally os.close()
-        }
-        val (dataBytes, index) =
-          OldFormat.writeDataFileIndexed(parts.toSeq, schema)
-        if (compress) {
-          val (cbytes, meta) = CompressedData.compress(
-            dataBytes, 16 * 1024, CompressedData.Lz4, adler = true)
-          write("Data.db", cbytes)
-          write("CompressionInfo.db", CompressedData.writeMeta(meta,
-            CompressedData.versionHasMaxCompressedSize("ka")))
-        } else write("Data.db", dataBytes)
-        // the 2.x sidecars the reference's own getPosition path
-        // consults: fixed-width Index.db entries (logical offsets —
-        // valid under compression too) and the Murmur3 bloom in the
-        // PRE-3.0 hash-word order a real ka/la generation carries
-        // (oldBfHashOrder — a fixture written with the modern order
-        // would mask reader-side order bugs)
-        write("Index.db", SSTableComponents.writeIndex2x(index))
-        // the era's Summary.db in its literal layout (sampled marks
-        // carry Index.db offsets — fixed-width 2.x entry framing:
-        // short keyLen + key + long position + int promoted size)
-        val idxPositions2x = {
-          var pos = 0L
-          index.map { case (k, _, prom) =>
-            val here = pos
-            pos += 2L + k.length + 8 + 4 + prom.length
-            here
-          }
-        }
-        val sampled2x = index.zip(idxPositions2x).zipWithIndex.collect {
-          case (((k, _, _), ip), i)
-            if i % SSTableComponents.MinIndexInterval == 0 => (k, ip)
-        }
-        if (index.nonEmpty)
-          write("Summary.db", SSTableComponents.writeSummary2x(
-            sampled2x, index.size.toLong, index.head._1, index.last._1))
-        val bloom = SSTableComponents
-          .newBloom(index.size.toLong, oldHashOrder = true)
-        index.foreach { case (k, _, _) => bloom.add(k) }
-        write("Filter.db", SSTableComponents.writeFilter(bloom))
-        // the pre-3.0 StatsMetadata sidecar (min/max timestamp over
-        // every atom, max local-deletion second) — what the sidecar
-        // inventory reports for ka/la generations instead of NULLs
-        val allTs = parts.iterator.flatMap(p =>
-          p.deletionUs.iterator ++ p.atoms.iterator.map {
-            case c: OldFormat.Cell2 => c.tsUs
-            case t: OldFormat.Tombstone2 => t.deletionUs
-          }).toSeq
-        val maxLdt = parts.iterator.flatMap(_.atoms.iterator).map {
-          case c: OldFormat.Cell2 => c.ldtS.getOrElse(Int.MaxValue)
-          case t: OldFormat.Tombstone2 => (t.deletionUs / 1000000L).toInt
-        }.foldLeft(Int.MinValue)(_ max _)
-        // the tombstone drop-time histogram + column-count total the
-        // droppability estimates read back, collected from the atoms
-        // actually written (MetadataCollector's role): EVERY atom
-        // with a finite local-deletion time contributes — partition
-        // deletions, range tombstones AND expiring/deleted cells
-        // (Cassandra 2.x's updateLocalDeletionTime skips only the
-        // live sentinel; TTL'd data counting as droppable is the
-        // whole point of the ratio)
-        val dropTimes = parts.iterator.flatMap(p =>
-          p.deletionUs.iterator.map(_ / 1000000L) ++
-            p.atoms.iterator.flatMap {
-              case t: OldFormat.Tombstone2 =>
-                Iterator.single(t.deletionUs / 1000000L)
-              case c: OldFormat.Cell2 =>
-                c.ldtS.iterator.map(_.toLong)
-            }).map(_.toDouble).toSeq
-        val nCells = parts.iterator.map(_.atoms.count {
-          case _: OldFormat.Cell2 => true
-          case _ => false
-        }.toLong).sum
-        // 2.1's min/maxColumnNames: per-clustering-component bounds
-        // over every cell's composite name AND both range-tombstone
-        // bounds (ColumnFamily.getColumnStats feeds the collector
-        // from cells and deletionInfo alike); the fixture's declared
-        // clustering is text, so the comparator is byte-lexicographic
-        val clNames = parts.iterator.flatMap(_.atoms.iterator.flatMap {
-          case c: OldFormat.Cell2 => Iterator.single(c.clustering)
-          case t: OldFormat.Tombstone2 => Iterator(t.start, t.end)
-        }).toSeq
-        def nameBound(worse: (String, String) => Boolean)
-            : Seq[Seq[Byte]] =
-          if (clNames.isEmpty) Nil
-          else (0 until clNames.map(_.size).min).map { i =>
-            clNames.map(_(i)).reduce((a, b) =>
-              if (worse(a, b)) b else a)
-              .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-              .toIndexedSeq: Seq[Byte]
-          }
-        write("Statistics.db", OldFormat.writeStats2x(
-          OldFormat.Stats2x(allTs.min, allTs.max, maxLdt,
-            sstableLevel = 0, repairedAt = 0L,
-            tombstoneDropTime = OldFormat.TombstoneHistogram.of(dropTimes),
-            estColumnsTotal = nCells,
-            minColumnNames = nameBound(_ > _),
-            maxColumnNames = nameBound(_ < _)), index.size.toLong,
-          compaction = Some(KeyCardinality.writeComponent2x(
-            KeyCardinality.sketchOf(index.iterator.map(_._1)),
-            // a designed compacted-from lineage (2.x CompactionMetadata
-            // ancestors — gen arithmetic the oracle replays)
-            ancestors = Seq(gen * 2, gen * 2 + 1)))))
-        (fileId, parts.length)
+    writeDocFixture(spark, sfDir, "graft-katable-") { (gen, docs, put) =>
+      val parts = docs.map { case (docId, source, nChars) =>
+        val kind = docId % 10
+        val wtSec = base + docId
+        val wtUs = wtSec * 1000000L
+        val ttl =
+          if (docId % 2 == 0 && docId % 100 != 0)
+            Some((docId % 100).toInt)
+          else None
+        val cl = Seq(s"c$docId")
+        val key = docId.toString
+        def marker = OldFormat.Cell2(cl, "", wtUs, ttl,
+          ttl.map(t => (wtSec + t).toInt), Some(""), deleted = false,
+          counter = false)
+        if (kind == 3)
+          OldFormat.Partition2(key, Some(wtUs), Nil)
+        else if (kind == 7)
+          OldFormat.Partition2(key, None, Seq(
+            OldFormat.Tombstone2(cl, startInclusive = true,
+              cl, endInclusive = true, wtUs)))
+        else if (kind == 5)
+          OldFormat.Partition2(key, None, Seq(marker))
+        else
+          OldFormat.Partition2(key, None, Seq(
+            marker,
+            OldFormat.Cell2(cl, "len", wtUs, ttl,
+              ttl.map(t => (wtSec + t).toInt), Some(nChars.toString),
+              deleted = false, counter = false),
+            OldFormat.Cell2(cl, "src", wtUs + 10000000L, ttl,
+              ttl.map(t => (wtSec + 10 + t).toInt), Some(source),
+              deleted = false, counter = false)))
       }
-      .collect()
-    out
+      def write(name: String, bytes: Array[Byte]): Unit =
+        put(s"graft-documents-ka-$gen-$name", bytes)
+      val (dataBytes, index) =
+        OldFormat.writeDataFileIndexed(parts.toSeq, schema)
+      if (compress) {
+        val (cbytes, meta) = CompressedData.compress(
+          dataBytes, 16 * 1024, CompressedData.Lz4, adler = true)
+        write("Data.db", cbytes)
+        write("CompressionInfo.db", CompressedData.writeMeta(meta,
+          CompressedData.versionHasMaxCompressedSize("ka")))
+      } else write("Data.db", dataBytes)
+      // the 2.x sidecars the reference's own getPosition path
+      // consults: fixed-width Index.db entries (logical offsets —
+      // valid under compression too), the era's Summary.db in its
+      // literal layout, and the Murmur3 bloom in the PRE-3.0
+      // hash-word order a real ka/la generation carries
+      // (oldBfHashOrder — a fixture written with the modern order
+      // would mask reader-side order bugs)
+      write("Index.db", SSTableComponents.writeIndex2x(index))
+      if (index.nonEmpty)
+        write("Summary.db", SSTableComponents.summary2x(index))
+      val bloom = SSTableComponents
+        .newBloom(index.size.toLong, oldHashOrder = true)
+      index.foreach { case (k, _, _) => bloom.add(k) }
+      write("Filter.db", SSTableComponents.writeFilter(bloom))
+      // the pre-3.0 StatsMetadata sidecar (min/max timestamp over
+      // every atom, max local-deletion second) — what the sidecar
+      // inventory reports for ka/la generations instead of NULLs
+      val allTs = parts.iterator.flatMap(p =>
+        p.deletionUs.iterator ++ p.atoms.iterator.map {
+          case c: OldFormat.Cell2 => c.tsUs
+          case t: OldFormat.Tombstone2 => t.deletionUs
+        }).toSeq
+      val maxLdt = parts.iterator.flatMap(_.atoms.iterator).map {
+        case c: OldFormat.Cell2 => c.ldtS.getOrElse(Int.MaxValue)
+        case t: OldFormat.Tombstone2 => (t.deletionUs / 1000000L).toInt
+      }.foldLeft(Int.MinValue)(_ max _)
+      // the tombstone drop-time histogram + column-count total the
+      // droppability estimates read back, collected from the atoms
+      // actually written (MetadataCollector's role): EVERY atom
+      // with a finite local-deletion time contributes — partition
+      // deletions, range tombstones AND expiring/deleted cells
+      // (Cassandra 2.x's updateLocalDeletionTime skips only the
+      // live sentinel; TTL'd data counting as droppable is the
+      // whole point of the ratio)
+      val dropTimes = parts.iterator.flatMap(p =>
+        p.deletionUs.iterator.map(_ / 1000000L) ++
+          p.atoms.iterator.flatMap {
+            case t: OldFormat.Tombstone2 =>
+              Iterator.single(t.deletionUs / 1000000L)
+            case c: OldFormat.Cell2 =>
+              c.ldtS.iterator.map(_.toLong)
+          }).map(_.toDouble).toSeq
+      val nCells = parts.iterator.map(_.atoms.count {
+        case _: OldFormat.Cell2 => true
+        case _ => false
+      }.toLong).sum
+      // 2.1's min/maxColumnNames: per-clustering-component bounds
+      // over every cell's composite name AND both range-tombstone
+      // bounds (ColumnFamily.getColumnStats feeds the collector
+      // from cells and deletionInfo alike); the fixture's declared
+      // clustering is text, so the comparator is byte-lexicographic
+      val clNames = parts.iterator.flatMap(_.atoms.iterator.flatMap {
+        case c: OldFormat.Cell2 => Iterator.single(c.clustering)
+        case t: OldFormat.Tombstone2 => Iterator(t.start, t.end)
+      }).toSeq
+      def nameBound(worse: (String, String) => Boolean)
+          : Seq[Seq[Byte]] =
+        if (clNames.isEmpty) Nil
+        else (0 until clNames.map(_.size).min).map { i =>
+          clNames.map(_(i)).reduce((a, b) =>
+            if (worse(a, b)) b else a)
+            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+            .toIndexedSeq: Seq[Byte]
+        }
+      write("Statistics.db", OldFormat.writeStats2x(
+        OldFormat.Stats2x(allTs.min, allTs.max, maxLdt,
+          sstableLevel = 0, repairedAt = 0L,
+          tombstoneDropTime = OldFormat.TombstoneHistogram.of(dropTimes),
+          estColumnsTotal = nCells,
+          minColumnNames = nameBound(_ > _),
+          maxColumnNames = nameBound(_ < _)), index.size.toLong,
+        compaction = Some(KeyCardinality.writeComponent2x(
+          KeyCardinality.sketchOf(index.iterator.map(_._1)),
+          // a designed compacted-from lineage (2.x CompactionMetadata
+          // ancestors — gen arithmetic the oracle replays)
+          ancestors = Seq(gen * 2, gen * 2 + 1)))))
+    }
   }
 
   /** Registered `src_sstable_2x`: the pre-3.0 decode path — the
@@ -2187,16 +2172,10 @@ object SSTableBinaryV2 {
         val (dataBytes, index) =
           OldFormat.writeDataFileIndexed(parts, schema,
             columnIndexSize = 512)
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(
-            new HPath(s"$outStr/documents/graft-documents-ka-1-$name"),
-            true)
-          try os.write(bytes) finally os.close()
-        }
-        write("Data.db", dataBytes)
-        write("Index.db", SSTableComponents.writeIndex2x(index))
+        val write = fileWriter(s"$outStr/documents", hconf.value.value)
+        write("graft-documents-ka-1-Data.db", dataBytes)
+        write("graft-documents-ka-1-Index.db",
+          SSTableComponents.writeIndex2x(index))
         index.count(_._3.nonEmpty)
       }.collect().head
     require(promotedCount == 4,
@@ -2301,62 +2280,42 @@ object SSTableBinaryV2 {
     * inclusive range tombstones. */
   def writeCompactFixture(spark: SparkSession,
       sfDir: String): java.nio.file.Path = {
-    import spark.implicits._
-    val out = graft.Scratch.dir("graft-compacttable-")
-    val outStr = out.toString
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val base = SSTableDumpBridge.TreeBase
-    val nFiles = SSTableDumpBridge.TreeFiles
     val schema = OldFormat.schemaOfCql(
       graft.model.CqlSchema.parse(CqlCompact2x)
         .fold(e => throw new IllegalArgumentException(e), identity))
-    graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long"), col("source"),
-        col("n_chars").cast("long"))
-      .as[(Long, String, Long)]
-      .groupByKey { case (docId, _, _) => (docId % nFiles).toInt }
-      .mapGroups { (fileId, docs) =>
-        val parts = docs.toArray.sortBy(_._1).map {
-          case (docId, source, nChars) =>
-            val kind = docId % 10
-            val wtSec = base + docId
-            val wtUs = wtSec * 1000000L
-            val ttl =
-              if (docId % 2 == 0 && docId % 100 != 0)
-                Some((docId % 100).toInt)
-              else None
-            val key = docId.toString
-            if (kind == 3)
-              OldFormat.Partition2(key, Some(wtUs), Nil)
-            else if (kind == 7)
-              OldFormat.Partition2(key, None, Seq(
-                OldFormat.Tombstone2(Seq(s"c$docId"),
-                  startInclusive = true, Seq(s"c$docId"),
-                  endInclusive = true, wtUs)))
-            else
-              OldFormat.Partition2(key, None, Seq(
-                OldFormat.Cell2(Seq(s"c$docId"), "value", wtUs, ttl,
-                  ttl.map(t => (wtSec + t).toInt),
-                  Some(nChars.toString), deleted = false,
-                  counter = false),
-                OldFormat.Cell2(Seq(s"d$docId"), "value",
-                  wtUs + 10000000L, ttl,
-                  ttl.map(t => (wtSec + 10 + t).toInt), Some(source),
-                  deleted = false, counter = false)))
+    writeDocFixture(spark, sfDir, "graft-compacttable-") {
+      (gen, docs, write) =>
+        val parts = docs.map { case (docId, source, nChars) =>
+          val kind = docId % 10
+          val wtSec = base + docId
+          val wtUs = wtSec * 1000000L
+          val ttl =
+            if (docId % 2 == 0 && docId % 100 != 0)
+              Some((docId % 100).toInt)
+            else None
+          val key = docId.toString
+          if (kind == 3)
+            OldFormat.Partition2(key, Some(wtUs), Nil)
+          else if (kind == 7)
+            OldFormat.Partition2(key, None, Seq(
+              OldFormat.Tombstone2(Seq(s"c$docId"),
+                startInclusive = true, Seq(s"c$docId"),
+                endInclusive = true, wtUs)))
+          else
+            OldFormat.Partition2(key, None, Seq(
+              OldFormat.Cell2(Seq(s"c$docId"), "value", wtUs, ttl,
+                ttl.map(t => (wtSec + t).toInt),
+                Some(nChars.toString), deleted = false,
+                counter = false),
+              OldFormat.Cell2(Seq(s"d$docId"), "value",
+                wtUs + 10000000L, ttl,
+                ttl.map(t => (wtSec + 10 + t).toInt), Some(source),
+                deleted = false, counter = false)))
         }
-        val gen = fileId + 1
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        val os = fs.create(
-          new HPath(s"$outStr/documents/graft-documents-ka-$gen-Data.db"),
-          true)
-        try os.write(OldFormat.writeDataFile(parts.toSeq, schema))
-        finally os.close()
-        (fileId, parts.length)
-      }
-      .collect()
-    out
+        write(s"graft-documents-ka-$gen-Data.db",
+          OldFormat.writeDataFile(parts.toSeq, schema))
+    }
   }
 
   /** Registered `src_sstable_compact`: the thrift dynamic-CF decode
@@ -2396,8 +2355,7 @@ object SSTableBinaryV2 {
     val in = binaryFixtureShared(spark, sfDir)
     val out = graft.Scratch.dir("graft-pointidx-")
     writeSSTables(readBinary(spark, in), out.toString,
-      "graft", "documents", compression = compression,
-      sources = Some(dataSourceIdentities(spark, in)))
+      "graft", "documents", compression = compression)
     val audit = SSTableDumpBridge.auditFrame(
       readBinary(spark, out.toString)
         .filter(col("partition_key").isin("8", "13", "15", "17")))
@@ -2423,8 +2381,7 @@ object SSTableBinaryV2 {
       .withColumn("cell",
         graft.model.CellModel.stripCellKeepDeletion(col("cell")))
     writeSSTables(stripped, out.toString, "graft", "documents",
-      graft.model.CqlSchema.parse(Cql2x).toOption,
-      sources = Some(dataSourceIdentities(spark, in.toString)))
+      graft.model.CqlSchema.parse(Cql2x).toOption)
     graft.Scratch.delete(in)
     val audit = SSTableDumpBridge
       .auditFrame(readBinary(spark, out.toString))
@@ -2450,60 +2407,39 @@ object SSTableBinaryV2 {
     * erase exactly that. */
   def writeOld2xCollFixture(spark: SparkSession,
       sfDir: String): java.nio.file.Path = {
-    import spark.implicits._
-    val out = graft.Scratch.dir("graft-kacoll-")
-    val outStr = out.toString
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val base = SSTableDumpBridge.TreeBase
-    val nFiles = SSTableDumpBridge.TreeFiles
     val schema = OldFormat.schemaOfCql(
       graft.model.CqlSchema.parse(Cql2xColl)
         .fold(e => throw new IllegalArgumentException(e), identity))
-    graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long"), col("source"),
-        col("n_chars").cast("long"))
-      .as[(Long, String, Long)]
-      .groupByKey { case (docId, _, _) => (docId % nFiles).toInt }
-      .mapGroups { (fileId, docs) =>
-        val parts = docs.toArray.sortBy(_._1).map {
-          case (docId, source, nChars) =>
-            val wtSec = base + docId
-            val wtUs = wtSec * 1000000L
-            val ttl =
-              if (docId % 2 == 0 && docId % 100 != 0)
-                Some((docId % 100).toInt)
-              else None
-            val ldt = ttl.map(t => (wtSec + t).toInt)
-            val cl = Seq(s"c$docId")
-            def live(name: String, v: String, dUs: Long) =
-              OldFormat.Cell2(cl, name, wtUs + dUs, ttl,
-                ldt, Some(v), deleted = false, counter = false)
-            val listPos = f"$docId%032x"
-            val cells = Seq(
-              live("tags[k0]", source, 0L),
-              live("tags[k1]", nChars.toString, 1000000L),
-              live(s"labels[s${docId % 5}]", "", 0L),
-              live(s"seq[$listPos]", source, 0L)) ++
-              (if (docId % 10 == 6)
-                Seq(OldFormat.Cell2(cl, "tags[gone]", wtUs + 2000000L,
-                  None, Some((wtSec + 2).toInt), None, deleted = true,
-                  counter = false))
-              else Nil)
-            OldFormat.Partition2(docId.toString, None, cells)
-        }
-        val gen = fileId + 1
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        val os = fs.create(
-          new HPath(s"$outStr/documents/graft-documents-ka-$gen-Data.db"),
-          true)
-        try os.write(OldFormat.writeDataFile(parts.toSeq, schema))
-        finally os.close()
-        (fileId, parts.length)
+    writeDocFixture(spark, sfDir, "graft-kacoll-") { (gen, docs, write) =>
+      val parts = docs.map { case (docId, source, nChars) =>
+        val wtSec = base + docId
+        val wtUs = wtSec * 1000000L
+        val ttl =
+          if (docId % 2 == 0 && docId % 100 != 0)
+            Some((docId % 100).toInt)
+          else None
+        val ldt = ttl.map(t => (wtSec + t).toInt)
+        val cl = Seq(s"c$docId")
+        def live(name: String, v: String, dUs: Long) =
+          OldFormat.Cell2(cl, name, wtUs + dUs, ttl,
+            ldt, Some(v), deleted = false, counter = false)
+        val listPos = f"$docId%032x"
+        val cells = Seq(
+          live("tags[k0]", source, 0L),
+          live("tags[k1]", nChars.toString, 1000000L),
+          live(s"labels[s${docId % 5}]", "", 0L),
+          live(s"seq[$listPos]", source, 0L)) ++
+          (if (docId % 10 == 6)
+            Seq(OldFormat.Cell2(cl, "tags[gone]", wtUs + 2000000L,
+              None, Some((wtSec + 2).toInt), None, deleted = true,
+              counter = false))
+          else Nil)
+        OldFormat.Partition2(docId.toString, None, cells)
       }
-      .collect()
-    out
+      write(s"graft-documents-ka-$gen-Data.db",
+        OldFormat.writeDataFile(parts.toSeq, schema))
+    }
   }
 
   /** Registered `src_sstable_2x_coll`: the cassandra-2 module's
@@ -2520,8 +2456,7 @@ object SSTableBinaryV2 {
       .withColumn("cell",
         graft.model.CellModel.stripCellKeepDeletion(col("cell")))
     writeSSTables(stripped, out.toString, "graft", "documents",
-      graft.model.CqlSchema.parse(Cql2xColl).toOption,
-      sources = Some(dataSourceIdentities(spark, in.toString)))
+      graft.model.CqlSchema.parse(Cql2xColl).toOption)
     graft.Scratch.delete(in)
     val audit = SSTableDumpBridge
       .auditFrame(readBinary(spark, out.toString))
@@ -2551,79 +2486,45 @@ object SSTableBinaryV2 {
     * DuckDB oracle replays every aggregate bit-for-bit. */
   def writeComplexFixture(spark: SparkSession,
       sfDir: String): java.nio.file.Path = {
-    import spark.implicits._
-    val out = graft.Scratch.dir("graft-cplxtable-")
-    val outStr = out.toString
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val base = SSTableDumpBridge.TreeBase
-    val nFiles = SSTableDumpBridge.TreeFiles
-    graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long"), col("source"),
-        col("n_chars").cast("long"))
-      .as[(Long, String, Long)]
-      .groupByKey { case (docId, _, _) => (docId % nFiles).toInt }
-      .mapGroups { (fileId, docs) =>
-        val sorted = docs.toArray.sortBy(_._1)
-        val parts = sorted.map { case (docId, source, nChars) =>
-          val kind = docId % 10
-          val wtSec = base + docId
-          val wtUs = wtSec * 1000000L
-          val ttl =
-            if (docId % 2 == 0 && docId % 100 != 0) Some((docId % 100).toInt)
-            else None
-          def cell(name: String, tsOff: Long, value: String,
-              path: Option[String]): BigFormat.CellAtom =
-            BigFormat.CellAtom(name, wtUs + tsOff, ttl,
-              ttl.map(t => (wtSec + tsOff / 1000000L + t).toInt),
-              Some(value), deleted = false, path)
-          val len = cell("len", 0L, nChars.toString, None)
-          val (attrsCells, complexDels) =
-            if (kind == 4)
-              (Seq(cell("attrs", 0L, source, Some("k0"))),
-                Seq("attrs" -> (wtUs - 1)))
-            else if (kind == 6)
-              (Seq(
-                BigFormat.CellAtom("attrs", wtUs, None, Some(wtSec.toInt),
-                  None, deleted = true, path = Some("k0")),
-                cell("attrs", 1000000L, nChars.toString, Some("k1"))),
-                Nil)
-            else
-              (Seq(cell("attrs", 0L, source, Some("k0")),
-                cell("attrs", 1000000L, nChars.toString, Some("k1"))),
-                Nil)
-          BigFormat.PartitionData(docId.toString, None, Seq(
-            BigFormat.RowAtom(Seq(Some(s"c$docId")), Some(wtUs), ttl,
-              ttl.map(t => (wtSec + t).toInt), None,
-              len +: attrsCells, complexDels)))
-        }
-        val (minTs, minLdt, minTtl) = BigFormat.encodingMinima(parts.toSeq)
-        val header = BigFormat.Header(minTs, minLdt, minTtl,
-          keyType = BigFormat.Utf8Type,
-          clusteringTypes = Seq(BigFormat.Utf8Type),
-          staticColumns = Nil,
-          regularColumns = Seq(
-            "len" -> BigFormat.Utf8Type,
-            "attrs" -> BigFormat.mapType(
-              BigFormat.Utf8Type, BigFormat.Utf8Type)))
-        val gen = fileId + 1
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        val dir = new HPath(s"$outStr/documents")
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(new HPath(dir, name), true)
-          try os.write(bytes) finally os.close()
-        }
-        write(s"nb-$gen-big-Data.db",
-          BigFormat.writeDataFile(parts.toSeq, header))
-        write(s"nb-$gen-big-Statistics.db", BigFormat.writeStats(header,
-          compaction = Some(KeyCardinality.writeComponent(
-            KeyCardinality.sketchOf(parts.iterator.map(p =>
-              BigFormat.encodeValue(header.keyType, p.key)))))))
-        (fileId, parts.length)
+    writeDocFixture(spark, sfDir, "graft-cplxtable-") { (gen, docs, write) =>
+      val parts = docs.map { case (docId, source, nChars) =>
+        val kind = docId % 10
+        val wtSec = base + docId
+        val wtUs = wtSec * 1000000L
+        val ttl =
+          if (docId % 2 == 0 && docId % 100 != 0) Some((docId % 100).toInt)
+          else None
+        def cell(name: String, tsOff: Long, value: String,
+            path: Option[String]): BigFormat.CellAtom =
+          BigFormat.CellAtom(name, wtUs + tsOff, ttl,
+            ttl.map(t => (wtSec + tsOff / 1000000L + t).toInt),
+            Some(value), deleted = false, path)
+        val len = cell("len", 0L, nChars.toString, None)
+        val (attrsCells, complexDels) =
+          if (kind == 4)
+            (Seq(cell("attrs", 0L, source, Some("k0"))),
+              Seq("attrs" -> (wtUs - 1)))
+          else if (kind == 6)
+            (Seq(
+              BigFormat.CellAtom("attrs", wtUs, None, Some(wtSec.toInt),
+                None, deleted = true, path = Some("k0")),
+              cell("attrs", 1000000L, nChars.toString, Some("k1"))),
+              Nil)
+          else
+            (Seq(cell("attrs", 0L, source, Some("k0")),
+              cell("attrs", 1000000L, nChars.toString, Some("k1"))),
+              Nil)
+        BigFormat.PartitionData(docId.toString, None, Seq(
+          BigFormat.RowAtom(Seq(Some(s"c$docId")), Some(wtUs), ttl,
+            ttl.map(t => (wtSec + t).toInt), None,
+            len +: attrsCells, complexDels)))
       }
-      .collect()
-    out
+      writeNbFixture(parts.toSeq, gen, write, Seq(
+        "len" -> BigFormat.Utf8Type,
+        "attrs" -> BigFormat.mapType(
+          BigFormat.Utf8Type, BigFormat.Utf8Type)))
+    }
   }
 
   /** Big-format fixture with a STATIC column and a COUNTER column —
@@ -2642,21 +2543,10 @@ object SSTableBinaryV2 {
     *     the strip bit-identically. */
   def writeStaticFixture(spark: SparkSession,
       sfDir: String): java.nio.file.Path = {
-    import spark.implicits._
-    val out = graft.Scratch.dir("graft-statictable-")
-    val outStr = out.toString
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val base = SSTableDumpBridge.TreeBase
-    val nFiles = SSTableDumpBridge.TreeFiles
-    graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long"), col("source"),
-        col("n_chars").cast("long"))
-      .as[(Long, String, Long)]
-      .groupByKey { case (docId, _, _) => (docId % nFiles).toInt }
-      .mapGroups { (fileId, docs) =>
-        val sorted = docs.toArray.sortBy(_._1)
-        val parts = sorted.map { case (docId, source, nChars) =>
+    writeDocFixture(spark, sfDir, "graft-statictable-") {
+      (gen, docs, write) =>
+        val parts = docs.map { case (docId, source, nChars) =>
           val wtSec = base + docId
           val wtUs = wtSec * 1000000L
           val ttl =
@@ -2676,32 +2566,12 @@ object SSTableBinaryV2 {
           BigFormat.PartitionData(docId.toString, None,
             Seq(staticRow, clustered))
         }
-        val (minTs, minLdt, minTtl) = BigFormat.encodingMinima(parts.toSeq)
-        val header = BigFormat.Header(minTs, minLdt, minTtl,
-          keyType = BigFormat.Utf8Type,
-          clusteringTypes = Seq(BigFormat.Utf8Type),
-          staticColumns = Seq("stitle" -> BigFormat.Utf8Type),
+        writeNbFixture(parts.toSeq, gen, write,
           regularColumns = Seq(
             "hits" -> BigFormat.CounterColumnType,
-            "len" -> BigFormat.Utf8Type))
-        val gen = fileId + 1
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        val dir = new HPath(s"$outStr/documents")
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(new HPath(dir, name), true)
-          try os.write(bytes) finally os.close()
-        }
-        write(s"nb-$gen-big-Data.db",
-          BigFormat.writeDataFile(parts.toSeq, header))
-        write(s"nb-$gen-big-Statistics.db", BigFormat.writeStats(header,
-          compaction = Some(KeyCardinality.writeComponent(
-            KeyCardinality.sketchOf(parts.iterator.map(p =>
-              BigFormat.encodeValue(header.keyType, p.key)))))))
-        (fileId, parts.length)
-      }
-      .collect()
-    out
+            "len" -> BigFormat.Utf8Type),
+          staticColumns = Seq("stitle" -> BigFormat.Utf8Type))
+    }
   }
 
   /** Registered `src_sstable_static`: the lifecycle over the
@@ -2718,8 +2588,7 @@ object SSTableBinaryV2 {
     val stripped = readBinary(spark, in.toString)
       .withColumn("cell",
         graft.model.CellModel.stripCellKeepDeletion(col("cell")))
-    writeSSTables(stripped, out.toString, "graft", "documents",
-      sources = Some(dataSourceIdentities(spark, in.toString)))
+    writeSSTables(stripped, out.toString, "graft", "documents")
     graft.Scratch.delete(in)
     val baseUs = lit(SSTableDumpBridge.TreeBase * 1000000L)
     val audit = readBinary(spark, out.toString)
@@ -2766,8 +2635,7 @@ object SSTableBinaryV2 {
     val stripped = readBinary(spark, in.toString)
       .withColumn("cell",
         graft.model.CellModel.stripCellKeepDeletion(col("cell")))
-    writeSSTables(stripped, out.toString, "graft", "documents",
-      sources = Some(dataSourceIdentities(spark, in.toString)))
+    writeSSTables(stripped, out.toString, "graft", "documents")
     graft.Scratch.delete(in)
     val audit = complexAuditFrame(readBinary(spark, out.toString))
       .localCheckpoint()
@@ -2786,65 +2654,30 @@ object SSTableBinaryV2 {
     * `CompositeType(UTF8Type,LongType)` key type. */
   def writeCompositeFixture(spark: SparkSession,
       sfDir: String): java.nio.file.Path = {
-    import spark.implicits._
-    val out = graft.Scratch.dir("graft-comptable-")
-    val outStr = out.toString
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     val base = SSTableDumpBridge.TreeBase
-    val nFiles = SSTableDumpBridge.TreeFiles
-    val keyType = BigFormat.compositeType(
-      Seq(BigFormat.Utf8Type, BigFormat.LongType))
-    graft.Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id").cast("long"), col("source"),
-        col("n_chars").cast("long"))
-      .as[(Long, String, Long)]
-      .groupByKey { case (docId, _, _) => (docId % nFiles).toInt }
-      .mapGroups { (fileId, docs) =>
-        val sorted = docs.toArray.sortBy(_._1)
-        val parts = sorted.map { case (docId, source, nChars) =>
-          val wtSec = base + docId
-          val wtUs = wtSec * 1000000L
-          val ttl =
-            if (docId % 2 == 0 && docId % 100 != 0) Some((docId % 100).toInt)
-            else None
-          val row = BigFormat.RowAtom(Seq(Some(s"c$docId")),
-            Some(wtUs), ttl, ttl.map(t => (wtSec + t).toInt), None, Seq(
-              BigFormat.CellAtom("len", wtUs, ttl,
-                ttl.map(t => (wtSec + t).toInt), Some(nChars.toString),
-                false),
-              BigFormat.CellAtom("origin", wtUs, ttl,
-                ttl.map(t => (wtSec + t).toInt), Some(source), false)))
-          // the ':'-joined rendering encodeValue re-splits into the
-          // declared component types
-          BigFormat.PartitionData(s"$source:$docId", None, Seq(row))
-        }
-        val (minTs, minLdt, minTtl) = BigFormat.encodingMinima(parts.toSeq)
-        val header = BigFormat.Header(minTs, minLdt, minTtl,
-          keyType = keyType,
-          clusteringTypes = Seq(BigFormat.Utf8Type),
-          staticColumns = Nil,
-          regularColumns = Seq(
-            "len" -> BigFormat.Utf8Type,
-            "origin" -> BigFormat.Utf8Type))
-        val gen = fileId + 1
-        val fs = FileSystem.get(
-          java.net.URI.create(outStr), hconf.value.value)
-        val dir = new HPath(s"$outStr/documents")
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(new HPath(dir, name), true)
-          try os.write(bytes) finally os.close()
-        }
-        write(s"nb-$gen-big-Data.db",
-          BigFormat.writeDataFile(parts.toSeq, header))
-        write(s"nb-$gen-big-Statistics.db", BigFormat.writeStats(header,
-          compaction = Some(KeyCardinality.writeComponent(
-            KeyCardinality.sketchOf(parts.iterator.map(p =>
-              BigFormat.encodeValue(header.keyType, p.key)))))))
-        (fileId, parts.length)
+    writeDocFixture(spark, sfDir, "graft-comptable-") { (gen, docs, write) =>
+      val parts = docs.map { case (docId, source, nChars) =>
+        val wtSec = base + docId
+        val wtUs = wtSec * 1000000L
+        val ttl =
+          if (docId % 2 == 0 && docId % 100 != 0) Some((docId % 100).toInt)
+          else None
+        val row = BigFormat.RowAtom(Seq(Some(s"c$docId")),
+          Some(wtUs), ttl, ttl.map(t => (wtSec + t).toInt), None, Seq(
+            BigFormat.CellAtom("len", wtUs, ttl,
+              ttl.map(t => (wtSec + t).toInt), Some(nChars.toString),
+              false),
+            BigFormat.CellAtom("origin", wtUs, ttl,
+              ttl.map(t => (wtSec + t).toInt), Some(source), false)))
+        // the ':'-joined rendering encodeValue re-splits into the
+        // declared component types
+        BigFormat.PartitionData(s"$source:$docId", None, Seq(row))
       }
-      .collect()
-    out
+      writeNbFixture(parts.toSeq, gen, write,
+        Seq("len" -> BigFormat.Utf8Type, "origin" -> BigFormat.Utf8Type),
+        keyType = BigFormat.compositeType(
+          Seq(BigFormat.Utf8Type, BigFormat.LongType)))
+    }
   }
 
   /** Registered `src_sstable_composite` — the whole lifecycle over a
@@ -2868,8 +2701,7 @@ object SSTableBinaryV2 {
       .withColumn("cell",
         graft.model.CellModel.stripCellKeepDeletion(col("cell")))
     writeSSTables(stripped, out.toString, "graft", "documents",
-      schema = Some(cql),
-      sources = Some(dataSourceIdentities(spark, in.toString)))
+      schema = Some(cql))
     graft.Scratch.delete(in)
     val baseUs = lit(SSTableDumpBridge.TreeBase * 1000000L)
     val audit = readBinary(spark, out.toString)
@@ -2918,34 +2750,6 @@ object SSTableBinaryV2 {
       s"unknown range-tombstone bound name '$other'")
   }
 
-  /** Write bridge-row cells back out as big-format SSTables under
-    * `out/<ks>/<table>/` — the reference's OUTPUT contract
-    * (`Cassandra4TTLRemover.java:85-87` builds an `SSTableWriter` per
-    * input table and re-serializes every partition): one output
-    * `nb-<gen>-big-Data.db` + `-Statistics.db` pair per SOURCE
-    * sstable (the reference rewrites file-per-file), partitions in
-    * Murmur3 token order (the partitioner the reference pins,
-    * `Cassandra4TTLRemover.java:63`), per-file EncodingStats minima
-    * computed from what is actually written.
-    *
-    * Scale shape: ONE shuffle keyed on the source sstable, then each
-    * task encodes and writes its own file pair through the session
-    * Hadoop FS — file-per-task, the write-side mirror of the read
-    * connector's file-per-task scans, with [[BigFormat]] as the same
-    * honest codec boundary (`mapGroups`) the fixture writer uses. A
-    * task buffers one output SSTable (the reference's own rewrite
-    * unit); tables whose per-SSTable volume outgrows a task split
-    * generations upstream, not here. Returns (sstable, rows written)
-    * per output file.
-    *
-    * Cell-model mapping (the read connector's, inverted): ROW cells
-    * group per (partition, clustering) into one row atom with
-    * explicit per-cell liveness (expiry second = expire_us/1e6);
-    * PK_LIVENESS becomes row liveness with no cells; ROW_DELETION /
-    * PARTITION_DELETION / RANGE_TOMBSTONE_BOUND become their marker
-    * forms. Clustering arity must be uniform per table (heterogeneous
-    * arity fails loudly — it would mean two different table schemas
-    * in one write). */
   /** Resolved CQL typing for the sink: marshal types for the key,
     * clustering and each declared column, plus the static set. */
   private[graft] final case class SinkTyping(
@@ -2985,35 +2789,53 @@ object SSTableBinaryV2 {
         .collect { case (n, t) if isStaticDecl(t) => n }.toSet)
   }
 
-  /** The sstable identities (the reader's rendering: the last two
-    * path components) of every `*-Data.db` under `root` — a
-    * DRIVER-side listing, no Spark job. For a [[writeSSTables]] call
-    * whose input frame is an unfiltered [[readBinary]] of `root`,
-    * this equals the frame's distinct `sstable` set (every fixture
-    * file carries rows), so passing it as `sources` spares the sink
-    * its generation-assignment pass over the data (guide §1.2:
-    * don't recompute what the caller already knows — that pass was a
-    * SECOND full decode of the input per sink call). */
-  private[graft] def dataSourceIdentities(spark: SparkSession,
-      root: String): Seq[String] = {
-    val fs = FileSystem.get(java.net.URI.create(root),
-      spark.sessionState.newHadoopConf())
-    val out = Seq.newBuilder[String]
-    val it = fs.listFiles(new HPath(root), true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && f.getPath.getName.endsWith("-Data.db"))
-        out += f.getPath.toString.split('/').takeRight(2).mkString("/")
-    }
-    out.result()
-  }
-
+  /** Write bridge-row cells back out as big-format SSTables under
+    * `out/<ks>/<table>/` — the reference's OUTPUT contract
+    * (`Cassandra4TTLRemover.java:85-87` builds an `SSTableWriter` per
+    * input table and re-serializes every partition): one output
+    * generation per SOURCE sstable (the reference rewrites
+    * file-per-file), partitions in Murmur3 token order (the
+    * partitioner the reference pins, `Cassandra4TTLRemover.java:63`),
+    * per-file EncodingStats minima computed from what is actually
+    * written. Each generation is the full loadable component set
+    * ([[SSTableComponents.buildAll]]): Data.db, Statistics.db,
+    * Index.db, Filter.db, Summary.db, Digest.crc32 and TOC.txt, plus
+    * CompressionInfo.db when compressed.
+    *
+    * Scale shape: ONE shuffle keyed on the source sstable, then each
+    * task encodes one generation and writes its components through
+    * the session Hadoop FS — file-per-task, the write-side mirror of
+    * the read connector's file-per-task scans, with [[BigFormat]] as
+    * the same honest codec boundary (`mapGroups`) the fixture writer
+    * uses. A task buffers one output SSTable (the reference's own
+    * rewrite unit); tables whose per-SSTable volume outgrows a task
+    * split generations upstream, not here.
+    *
+    * Commit: a task stages its components under
+    * `<table>/_staging-<call>/<task>/<Component>` (names the
+    * connector's `-Data.db` discovery never matches) and returns
+    * (source, staging id, rows). Only then does the driver name the
+    * generations and rename each staged set to
+    * `nb-<gen>-big-<Component>`, Data.db last (readers discover a
+    * generation by it). The staging directory is deleted whether the
+    * job succeeds or fails, so a failed write leaves no generation
+    * behind (a task still running when its job fails can only add
+    * staged names, which no reader discovers). Returns (sstable, rows
+    * written) per output file, sorted.
+    *
+    * Cell-model mapping (the read connector's, inverted): ROW cells
+    * group per (partition, clustering) into one row atom with
+    * explicit per-cell liveness (expiry second = expire_us/1e6);
+    * PK_LIVENESS becomes row liveness with no cells; ROW_DELETION /
+    * PARTITION_DELETION / RANGE_TOMBSTONE_BOUND become their marker
+    * forms. Clustering arity must be uniform per table (heterogeneous
+    * arity fails loudly — it would mean two different table schemas
+    * in one write). */
   def writeSSTables(cells: DataFrame, outDir: String, keyspace: String,
       table: String,
       schema: Option[graft.model.CqlSchema.Parsed] = None,
       compression: Option[String] = None,
-      columnIndexSize: Int = BigFormat.ColumnIndexSize,
-      sources: Option[Seq[String]] = None)
+      columnIndexSize: Int = BigFormat.ColumnIndexSize)
       : Seq[(String, Long)] = {
     val spark = cells.sparkSession
     import spark.implicits._
@@ -3024,58 +2846,21 @@ object SSTableBinaryV2 {
     compression.foreach(c => require(CompressedData.Supported(c),
       s"unsupported sink compressor '$c' (supported: " +
         s"${CompressedData.Supported.toSeq.sorted.mkString(", ")})"))
-    val hconf = spark.sparkContext.broadcast(
-      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    val conf = spark.sessionState.newHadoopConf()
+    val hconf =
+      spark.sparkContext.broadcast(new SerializableConfiguration(conf))
+    val tableDir = new HPath(s"$outDir/$keyspace/$table")
+    val staging = new HPath(tableDir,
+      s"_staging-${java.util.UUID.randomUUID()}")
+    val stagingStr = staging.toString
     val selected = cells
       .select(col("partition_key"), col("clustering"), col("row_kind"),
         col("name"), col("cell"), col("deletion_us"), col("sstable"))
       .as[SinkRow]
-    // Output generations assigned ON THE DRIVER over the distinct
-    // source identities (catalog-sized: one row per source file), so
-    // two sources in different subdirectories that share a basename
-    // generation (t1/nb-1-big-Data.db and t2/nb-1-big-Data.db under
-    // one load root) can never map to the same output path and
-    // silently clobber each other. Rule: in sorted source order, a
-    // source keeps the first integer of its basename if still free
-    // (the reference's identity-partitioning contract, output
-    // generation = input generation, `Cassandra3TTLRemover.java:57-61`);
-    // a collision — or a nameless source — deterministically takes the
-    // smallest unused generation above the maximum parsed one.
-    // `sources`, when given, replaces the distinct job: callers whose
-    // frame is an unfiltered connector read (or built with a known
-    // identity set) already hold the distinct set, and the job was a
-    // full second decode of the input. The contract is exact equality
-    // with the frame's distinct set: a source present in the data but
-    // missing from the list fails loudly below (generation lookup),
-    // and duplicates are collapsed here so a careless caller cannot
-    // double-assign.
-    val genOf: Map[String, Int] = {
-      val srcs = sources match {
-        case Some(s) => s.distinct.sorted.toArray
-        case None => selected.select(col("sstable")).distinct()
-          .as[String].collect().sorted
-      }
-      val parsed = srcs.map(s =>
-        s -> "\\d+".r.findFirstIn(s.split('/').last).map(_.toInt))
-      var next = parsed.flatMap(_._2).foldLeft(0)(math.max) + 1
-      val used = scala.collection.mutable.Set.empty[Int]
-      parsed.map { case (src, g) =>
-        val gen = g.filterNot(used) match {
-          case Some(free) => free
-          case None => val n = next; next += 1; n
-        }
-        used += gen
-        src -> gen
-      }.toMap
-    }
-    selected
+    val staged = selected
       .groupByKey(_.sstable)
       .mapGroups { (src, it) =>
         val rows = it.toArray
-        val gen = genOf.getOrElse(src, throw new IllegalArgumentException(
-          s"writeSSTables: source '$src' appears in the data but not " +
-            "in the caller-provided source set — the explicit `sources` " +
-            "list must equal the frame's distinct sstable identities"))
         val unknown = rows.iterator.map(_.row_kind).find(k =>
           !Set("ROW", "PK_LIVENESS", "ROW_DELETION", "CELL_DELETION",
             "COMPLEX_DELETION", "PARTITION_DELETION",
@@ -3385,27 +3170,61 @@ object SSTableBinaryV2 {
             .flatten.map(_.toIndexedSeq: Seq[Byte]).toSeq,
           maxClusteringValues = clMax.takeWhile(_.isDefined)
             .flatten.map(_.toIndexedSeq: Seq[Byte]).toSeq)
-        val fs = FileSystem.get(
-          java.net.URI.create(outDir), hconf.value.value)
-        val dir = new HPath(s"$outDir/$keyspace/$table")
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(new HPath(dir, name), true)
-          try os.write(bytes) finally os.close()
-        }
         // the FULL loadable component set — primary index, bloom
         // filter, sampled summary, digest and TOC alongside
         // Data/Statistics (the reference's bulk-load-back contract,
-        // `Cassandra3TTLRemoverTest.java:168-176`)
+        // `Cassandra3TTLRemoverTest.java:168-176`), staged under this
+        // task's own directory
+        val stageId = java.util.UUID.randomUUID().toString
+        val write = fileWriter(s"$stagingStr/$stageId", hconf.value.value)
         val (dataBytes, index) =
           BigFormat.writeDataFileIndexed(parts, header, columnIndexSize)
         SSTableComponents.buildAll(dataBytes, index, header,
           compression = compression, stats = Some(collected))
-          .foreach { case (comp, bytes) =>
-            write(s"nb-$gen-big-$comp", bytes)
-          }
-        (s"$table/nb-$gen-big-Data.db", rows.length.toLong)
+          .foreach(write.tupled)
+        (src, stageId, rows.length.toLong)
       }
-      .collect().toSeq.sortBy(_._1)
+    val fs = tableDir.getFileSystem(conf)
+    try {
+      val manifest = staged.collect()
+      // Output generations are named ON THE DRIVER over the collected
+      // manifest (catalog-sized: one row per source file), so two
+      // sources in different subdirectories that share a basename
+      // generation (t1/nb-1-big-Data.db and t2/nb-1-big-Data.db under
+      // one load root) can never map to the same output path and
+      // silently clobber each other. Rule: in sorted source order, a
+      // source keeps the first integer of its basename if still free
+      // (the reference's identity-partitioning contract, output
+      // generation = input generation,
+      // `Cassandra3TTLRemover.java:57-61`); a collision — or a
+      // nameless source — deterministically takes the smallest unused
+      // generation above the maximum parsed one.
+      val parsed = manifest.map(_._1).sorted.map(s =>
+        s -> "\\d+".r.findFirstIn(s.split('/').last).map(_.toInt))
+      var next = parsed.flatMap(_._2).foldLeft(0)(math.max) + 1
+      val used = scala.collection.mutable.Set.empty[Int]
+      val genOf = parsed.map { case (src, g) =>
+        val gen = g.filterNot(used) match {
+          case Some(free) => free
+          case None => val n = next; next += 1; n
+        }
+        used += gen
+        src -> gen
+      }.toMap
+      manifest.map { case (src, stageId, rows) =>
+        val gen = genOf(src)
+        // Data.db last: readers discover a generation by it; an
+        // existing target (a rerun into the same `out`) is replaced
+        fs.listStatus(new HPath(staging, stageId)).map(_.getPath)
+          .sortBy(_.getName == "Data.db").foreach { from =>
+            val to = new HPath(tableDir, s"nb-$gen-big-${from.getName}")
+            if (fs.exists(to)) fs.delete(to, false)
+            if (!fs.rename(from, to))
+              throw new java.io.IOException(s"could not rename $from to $to")
+          }
+        (s"$table/nb-$gen-big-Data.db", rows)
+      }.toSeq.sortBy(_._1)
+    } finally fs.delete(staging, true)
   }
 
   /** Registered `src_sstable_roundtrip` — the reference's WHOLE
@@ -3423,8 +3242,7 @@ object SSTableBinaryV2 {
     val stripped = readBinary(spark, in.toString)
       .withColumn("cell",
         graft.model.CellModel.stripCellKeepDeletion(col("cell")))
-    writeSSTables(stripped, out.toString, "graft", "documents",
-      sources = Some(dataSourceIdentities(spark, in.toString)))
+    writeSSTables(stripped, out.toString, "graft", "documents")
     val audit = SSTableDumpBridge
       .auditFrame(readBinary(spark, out.toString))
       .localCheckpoint()
@@ -3469,8 +3287,7 @@ object SSTableBinaryV2 {
         val in = binaryFixtureShared(spark, sfDir)
         val out = graft.Scratch.dir("graft-splitaudit-")
         writeSSTables(readBinary(spark, in), out.toString,
-          "graft", "documents", compression = compression,
-          sources = Some(dataSourceIdentities(spark, in)))
+          "graft", "documents", compression = compression)
         out.toString
     }
     // 2048, not the old 512: at bench SF a 512-byte target makes each
@@ -3620,8 +3437,7 @@ object SSTableBinaryV2 {
         "src text, PRIMARY KEY (pk, ck))")
       .fold(e => throw new IllegalArgumentException(e), identity)
     writeSSTables(readBinary(spark, in), out.toString,
-      "graft", "documents", Some(cql),
-      sources = Some(dataSourceIdentities(spark, in)))
+      "graft", "documents", Some(cql))
     val dir = s"$out/graft/documents"
     val keys = Seq("8", "13", "15", "17")
     def tok(k: String): Long = BigFormat.murmur3Token(
@@ -3674,13 +3490,7 @@ object SSTableBinaryV2 {
     writeSSTables(
       readBinary(spark, in)
         .filter(col("partition_key").cast("long") < 1000),
-      out.toString, "graft", "documents",
-      // the frame is FILTERED, so the listing may be a superset of
-      // its distinct sstable set — harmless here: generations parse
-      // uniquely from the fixture's nb-<g> basenames (no collision
-      // resolution to shift), and groups that lost every row are
-      // simply never written
-      sources = Some(dataSourceIdentities(spark, in)))
+      out.toString, "graft", "documents")
     val dir = s"$out/graft/documents"
     // doc 378: ROW-shaped (378%10=8), fileId 378%4=2 → generation 3
     val dataP = java.nio.file.Paths.get(dir, "nb-3-big-Data.db")
@@ -3729,8 +3539,7 @@ object SSTableBinaryV2 {
     val in = binaryFixtureShared(spark, sfDir)
     val out = graft.Scratch.dir("graft-digestaudit-")
     writeSSTables(readBinary(spark, in), out.toString,
-      "graft", "documents",
-      sources = Some(dataSourceIdentities(spark, in)))
+      "graft", "documents")
     val audit = SSTableDumpBridge.auditFrame(
       readBinary(spark, out.toString, None, verify = true))
       .localCheckpoint()
@@ -3838,8 +3647,7 @@ object SSTableBinaryV2 {
       val out = graft.Scratch.dir("graft-plainset-")
       val in = binaryFixtureShared(spark, sfDir)
       writeSSTables(readBinary(spark, in),
-        out.toString, "graft", "documents",
-        sources = Some(dataSourceIdentities(spark, in)))
+        out.toString, "graft", "documents")
       s"$out/graft/documents"
     })
 
@@ -3853,11 +3661,7 @@ object SSTableBinaryV2 {
         "CREATE TABLE graft.documents (pk text, ck bigint, v text, " +
           "PRIMARY KEY (pk, ck))").toOption
       writeSSTables(wideFrame(spark, sfDir), out.toString, "graft",
-        "documents", schema, columnIndexSize = WideBlockBytes,
-        // wideFrame synthesizes identities t/nb-<docId%4+1> and every
-        // residue class is populated at every SF (doc ids are dense
-        // from 0), so the set is known without a pass over the data
-        sources = Some((1 to 4).map(g => s"t/nb-$g-big-Data.db")))
+        "documents", schema, columnIndexSize = WideBlockBytes)
       s"$out/graft/documents"
     })
 
@@ -4066,9 +3870,7 @@ object SSTableBinaryV2 {
     val schema = graft.model.CqlSchema.parse(
       "CREATE TABLE graft.documents (pk text, ck bigint, v text, " +
         "PRIMARY KEY (pk, ck))").toOption
-    writeSSTables(frame, out.toString, "graft", "documents", schema,
-      // designed frame: exactly generations 1..3 by construction
-      sources = Some((1 to 3).map(g => s"documents/nb-$g-big-Data.db")))
+    writeSSTables(frame, out.toString, "graft", "documents", schema)
     val dir = s"$out/graft/documents"
     def restricted(df: DataFrame): DataFrame = df
       .filter(col("clustering")(0).cast("long").between(1005L, 1015L))

@@ -343,6 +343,24 @@ object SSTableComponents {
     bos.toByteArray
   }
 
+  /** The Summary.db of a 2.x generation whose Index.db is
+    * [[writeIndex2x]] of `index` (non-empty): every
+    * [[MinIndexInterval]]-th key from the first, sampled at its
+    * fixed-width Index.db entry offset (short keyLen + key + long
+    * position + int promoted size + promoted payload). */
+  def summary2x(
+      index: Seq[(Array[Byte], Long, Array[Byte])]): Array[Byte] = {
+    val offsets = index.scanLeft(0L) { case (pos, (key, _, promoted)) =>
+      pos + 2 + key.length + 8 + 4 + promoted.length
+    }
+    val sampled = index.zip(offsets).zipWithIndex.collect {
+      case (((key, _, _), pos), i) if i % MinIndexInterval == 0 =>
+        (key, pos)
+    }
+    writeSummary2x(sampled, index.size.toLong,
+      index.head._1, index.last._1)
+  }
+
   /** Parse a pre-3.0 Summary.db back into [[Summary]] — the LITERAL
     * read the reference performs at open, closing the one component
     * this engine previously always regenerated from Index.db. A

@@ -758,13 +758,10 @@ object SSTableMetadata {
     val outB = graft.Scratch.dir("graft-keycount-b-")
     val outC = graft.Scratch.dir("graft-keycount-c-")
     // three independent sink jobs of the same frame to disjoint dirs
-    // — overlap them (guide §2.6); one driver-side listing feeds all
-    // three generation assignments (the frame is an unfiltered read
-    // of `in`, so the listing IS its distinct sstable set)
-    val srcIds = SSTableBinaryV2.dataSourceIdentities(spark, in)
+    // — overlap them (guide §2.6)
     graft.Par.all(Seq(outA, outB, outC).map(o => () =>
       SSTableBinaryV2.writeSSTables(frame, o.toString,
-        "graft", "documents", sources = Some(srcIds))))
+        "graft", "documents")))
     val dirB = outB.resolve("graft").resolve("documents")
     val dirC = outC.resolve("graft").resolve("documents")
     import scala.jdk.CollectionConverters._
@@ -1172,11 +1169,7 @@ object SSTableMetadata {
         col("cell_t._4").as("expire_us")))
       .drop("cell_t")
     val src = graft.Scratch.dir("graft-expedge-")
-    SSTableBinaryV2.writeSSTables(frame, src.toString,
-      "graft", "documents",
-      // designed frame: the identity set is `rows`' gen column
-      sources = Some(rows.map(r => s"documents/nb-${r._2}-big-Data.db")
-        .distinct))
+    SSTableBinaryV2.writeSSTables(frame, src.toString, "graft", "documents")
     val gcBeforeS = Int.MaxValue - 1
     val root = s"$src/graft/documents"
     // the premise, gated off the real panel: exactly gens 1 and 5
@@ -1427,10 +1420,7 @@ object SSTableMetadata {
     // are independent sink jobs — overlap them (guide §2.6)
     graft.Par.all(Seq(
       () => { SSTableBinaryV2.writeSSTables(frame, src.toString,
-        "graft", "documents",
-        // designed frame: identities are doc_id%2+1 ⇒ exactly nb-1/nb-2
-        sources = Some(Seq("documents/nb-1-big-Data.db",
-          "documents/nb-2-big-Data.db"))); () },
+        "graft", "documents"); () },
       () => Seq(("documents/nb-2-big-Data.db", 4.0))
         .toDF("sstable", "rate_15m")
         .write.mode("overwrite").parquet(act.toString)))
@@ -1518,29 +1508,13 @@ object SSTableMetadata {
         val gen = genId + 1
         val (dataBytes, index) =
           OldFormat.writeDataFileIndexed(parts, schema)
-        val idxPositions = {
-          var pos = 0L
-          index.map { case (k, _, prom) =>
-            val here = pos
-            pos += 2L + k.length + 8 + 4 + prom.length
-            here
-          }
-        }
-        val sampled = index.zip(idxPositions).zipWithIndex.collect {
-          case (((k, _, _), ip), i)
-            if i % SSTableComponents.MinIndexInterval == 0 => (k, ip)
-        }
-        val fs = FileSystem.get(
-          java.net.URI.create(srcStr), bc.value.value)
-        def write(name: String, bytes: Array[Byte]): Unit = {
-          val os = fs.create(new HPath(
-            s"$srcStr/documents/graft-documents-ka-$gen-$name"), true)
-          try os.write(bytes) finally os.close()
-        }
-        write("Data.db", dataBytes)
-        write("Summary.db", SSTableComponents.writeSummary2x(
-          sampled, index.size.toLong, index.head._1, index.last._1))
-        (gen, index.size, sampled.size)
+        val summary = SSTableComponents.summary2x(index)
+        val write = SSTableBinaryV2.fileWriter(
+          s"$srcStr/documents", bc.value.value)
+        write(s"graft-documents-ka-$gen-Data.db", dataBytes)
+        write(s"graft-documents-ka-$gen-Summary.db", summary)
+        (gen, index.size,
+          SSTableComponents.readSummary2x(summary).sampled.size)
       }
       .collect().foreach { case (gen, nParts, marks) =>
         require(nParts == 960 && marks == 8,
@@ -1683,10 +1657,7 @@ object SSTableMetadata {
     val src = graft.Scratch.dir("graft-trackact-src-")
     val act = graft.Scratch.dir("graft-trackact-act-")
     val out = graft.Scratch.dir("graft-trackact-out-")
-    SSTableBinaryV2.writeSSTables(frame, src.toString,
-      "graft", "documents",
-      // designed frame: doc_id%4+1 over docs 0..479 ⇒ exactly nb-1..4
-      sources = Some((1 to 4).map(g => s"documents/nb-$g-big-Data.db")))
+    SSTableBinaryV2.writeSSTables(frame, src.toString, "graft", "documents")
     val root = s"$src/graft/documents"
     val epoch = java.util.UUID.randomUUID().toString
     val tick = RestorableMeter.TickIntervalNanos
@@ -1905,15 +1876,13 @@ object SSTableMetadata {
     val out = graft.Scratch.dir("graft-statsaudit-")
     val outLz4 = graft.Scratch.dir("graft-statsauditlz4-")
     // two independent sink jobs to disjoint dirs — overlap (guide
-    // §2.6); one driver-side listing replaces both generation passes
-    val srcIds = SSTableBinaryV2.dataSourceIdentities(spark, in)
+    // §2.6)
     graft.Par.all(Seq(
       () => SSTableBinaryV2.writeSSTables(frame, out.toString,
-        "graft", "documents", sources = Some(srcIds)),
+        "graft", "documents"),
       () => SSTableBinaryV2.writeSSTables(frame, outLz4.toString,
         "graft", "documents",
-        compression = Some(CompressedData.Lz4),
-        sources = Some(srcIds))))
+        compression = Some(CompressedData.Lz4))))
     // the plain leg re-emits each generation's Statistics.db with a
     // DESIGNED 4.0 repair tail — pendingRepair session, isTransient,
     // originatingHostId, all f-arithmetic UUIDs the oracle replays —
@@ -2001,16 +1970,13 @@ object SSTableMetadata {
     val outLz4 = graft.Scratch.dir("graft-metaauditlz4-")
     val frame = SSTableBinaryV2.readBinary(spark, in)
     // three independent fixture writes to disjoint dirs — overlap
-    // them (guide §2.6); one driver-side listing replaces both sink
-    // generation passes
-    val srcIds = SSTableBinaryV2.dataSourceIdentities(spark, in)
+    // them (guide §2.6)
     val outKa = graft.Par.all(Seq(
       () => { SSTableBinaryV2.writeSSTables(frame, out.toString,
-        "graft", "documents", sources = Some(srcIds)); None },
+        "graft", "documents"); None },
       () => { SSTableBinaryV2.writeSSTables(frame, outLz4.toString,
         "graft", "documents",
-        compression = Some(CompressedData.Lz4),
-        sources = Some(srcIds)); None },
+        compression = Some(CompressedData.Lz4)); None },
       () => Some(SSTableBinaryV2.writeOldFixture(spark, sfDir))))
       .flatten.head
     val genDirs = Seq(

@@ -553,22 +553,13 @@ object StreamingOps {
     val child = streamingSession(spark)
     val ckptPath = graft.Scratch.dir("graft-ckpt-")
     val outStr = out.toString
-    // the fixture's identity set, listed once on the driver: every
-    // batch's distinct sstables are a subset, generations parse
-    // uniquely from the nb-<g> basenames (no collision resolution to
-    // shift), and groups absent from a batch are simply not written —
-    // so passing the superset is output-identical while sparing each
-    // micro-batch BOTH the isEmpty probe and the sink's generation
-    // pass (each was a full re-decode of the batch: 3 decodes per
-    // trigger down to 1)
-    val srcIds = SSTableBinaryV2.dataSourceIdentities(spark, in)
     val q = child.readStream.format("sstable-big")
       .option("maxFilesPerTrigger", "1").load(in)
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[
         org.apache.spark.sql.Row], _: Long) =>
         SSTableBinaryV2.writeSSTables(batch.toDF(), outStr,
-          "graft", "documents", sources = Some(srcIds))
+          "graft", "documents")
         ()
       }
       .option("checkpointLocation", ckptPath.toString)

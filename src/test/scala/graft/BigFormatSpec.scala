@@ -3380,6 +3380,42 @@ class SSTableBinarySpec extends SparkSpec {
     } finally Scratch.delete(out)
   }
 
+  test("binary sink: a failed write leaves nothing loadable") {
+    // one good source and one the sink cannot encode: the write
+    // throws, and neither a generation nor the staging area survives
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val wt = 1609459200L * 1000000L
+    val rows = Seq(
+      ("p1", Seq("c"), "ROW", Some("v"), Some(("x", wt)),
+        None: Option[Long], "t/nb-1-big-Data.db"),
+      ("p2", Seq("c"), "SOMETHING_NEW", None: Option[String],
+        None: Option[(String, Long)], Some(wt), "t/nb-2-big-Data.db"))
+      .toDF("partition_key", "clustering", "row_kind", "name",
+        "cell_t", "deletion_us", "sstable")
+      .withColumn("cell", when(col("cell_t").isNotNull,
+        org.apache.spark.sql.functions.struct(
+          col("cell_t._1").as("value"), col("cell_t._2").as("writetime_us"),
+          lit(null).cast("int").as("ttl_s"),
+          lit(null).cast("long").as("expire_us"))))
+      .drop("cell_t")
+    val out = Scratch.dir("graft-failedwrite-")
+    try {
+      val ex = intercept[org.apache.spark.SparkException] {
+        SSTableBinaryV2.writeSSTables(rows, out.toString, "ks", "t")
+      }
+      assert(ex.toString.contains("SOMETHING_NEW") ||
+        Option(ex.getCause).exists(_.toString.contains("SOMETHING_NEW")))
+      val left = {
+        val s = java.nio.file.Files.walk(out)
+        try s.iterator().asScala.map(out.relativize(_).toString).toList
+        finally s.close()
+      }
+      assert(!left.exists(_.endsWith("-Data.db")), left.mkString(", "))
+      assert(!left.exists(_.contains("_staging-")), left.mkString(", "))
+    } finally Scratch.delete(out)
+  }
+
   test("binary sink: same-generation sources in different dirs never clobber") {
     // t1/nb-1 and t2/nb-1 under one load root: without driver-side
     // generation assignment both map to out/ks/t/nb-1-big-Data.db and

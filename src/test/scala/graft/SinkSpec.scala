@@ -154,45 +154,40 @@ class SinkSpec extends SparkSpec {
     assert(df.select(cols: _*).exceptAll(fromCsv.select(cols: _*)).isEmpty)
   }
 
-  test("binary sink: caller-provided sources match the default generation pass") {
-    import graft.sources.{SSTableBinaryV2, SSTableDumpBridge}
+  test("binary sink: a CLI sstable rewrite scans its input once") {
+    // the sink names generations after it writes them, so no job
+    // besides the write itself decodes the input: exactly one
+    // executed plan may carry a `sstable-big` batch scan
+    import graft.sources.SSTableBinaryV2
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
     val in = SSTableBinaryV2.writeBinaryFixture(spark, sfDir)
-    val outA = graft.Scratch.dir("graft-srcsink-a-")
-    val outB = graft.Scratch.dir("graft-srcsink-b-")
+    val out = graft.Scratch.dir("graft-readonce-")
+    val plans =
+      java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = plans.add(qe.executedPlan.toString)
+    }
+    spark.listenerManager.register(listener)
     try {
-      val frame = SSTableBinaryV2.readBinary(spark, in.toString)
-        .localCheckpoint()
-      // the driver-side listing equals the frame's distinct sstable set
-      val listed = SSTableBinaryV2
-        .dataSourceIdentities(spark, in.toString).sorted
-      val distinct = frame.select("sstable").distinct()
-        .collect().map(_.getString(0)).sorted.toSeq
-      assert(listed === distinct)
-      // explicit sources produce the SAME manifest and byte-identical
-      // frames as the default distinct-job path
-      val mA = SSTableBinaryV2.writeSSTables(frame, outA.toString,
-        "graft", "documents")
-      val mB = SSTableBinaryV2.writeSSTables(frame, outB.toString,
-        "graft", "documents", sources = Some(listed))
-      assert(mA === mB)
-      val backA = SSTableBinaryV2.readBinary(spark, outA.toString)
-      val backB = SSTableBinaryV2.readBinary(spark, outB.toString)
-      assert(backA.exceptAll(backB).count() === 0)
-      assert(backB.exceptAll(backA).count() === 0)
-      // a source present in the data but missing from the list fails
-      // loudly (never a silent mis-assignment)
-      val err = intercept[org.apache.spark.SparkException] {
-        SSTableBinaryV2.writeSSTables(frame,
-          graft.Scratch.dir("graft-srcsink-c-").toString,
-          "graft", "documents", sources = Some(listed.tail))
-      }
-      assert(err.getMessage.contains("caller-provided source set") ||
-        Option(err.getCause).exists(
-          _.getMessage.contains("caller-provided source set")))
+      val args = RemoverCli.parse(Array("--in", in.toString,
+        "--out", s"$out/o", "--table", "documents", "--format", "sstable",
+        "--sink", "sstable")).fold(e => fail(e), identity)
+      assert(RemoverCli.run(spark, args) > 0)
+      org.apache.spark.sql.graftbridge.ListenerFlush
+        .waitUntilEmpty(spark.sparkContext)
+      val scans = plans.asScala.count(_.linesIterator.exists(l =>
+        l.contains("BatchScan") && l.contains("sstable-big")))
+      assert(scans === 1, s"input scanned by $scans plans:\n" +
+        plans.asScala.mkString("\n---\n"))
     } finally {
+      spark.listenerManager.unregister(listener)
       graft.Scratch.delete(in)
-      graft.Scratch.delete(outA)
-      graft.Scratch.delete(outB)
+      graft.Scratch.delete(out)
     }
   }
 }
