@@ -2071,10 +2071,11 @@ object BigFormat {
     Some(PartitionData(key, partitionDeletion, atoms.result()))
   }
 
-  /** Caps a stream at a byte budget so the atom decoder sees clean
-    * EOF exactly at the selected blocks' end. Never closes the
-    * underlying stream (it is typically a shared seekable handle). */
-  private class BoundedIn(in: java.io.InputStream,
+  /** Caps a stream at a byte budget so a decoder sees clean EOF
+    * exactly at a span's end (a split range, or the selected promoted
+    * blocks). Never closes the underlying stream: it is typically a
+    * shared seekable handle whose owner closes it. */
+  private[sources] final class BoundedIn(in: java.io.InputStream,
       private var remaining: Long) extends java.io.InputStream {
     override def read(): Int =
       if (remaining <= 0) -1
@@ -2087,6 +2088,35 @@ object BigFormat {
         n
       }
     override def close(): Unit = ()
+  }
+
+  /** Decode a BYTE-OWNED subrange of one promoted partition: the
+    * blocks whose absolute Data.db start (`partitionPos + offset`)
+    * falls in [loAbs, hiAbs). This is the sub-partition split unit —
+    * an oversized partition (one bigger than the scan's split target)
+    * stops serializing in a single task because each blind range owns
+    * exactly the promoted blocks that START inside it (the same
+    * disjoint-tiling ownership rule the split aligner uses for whole
+    * partitions). `serveHeader` marks the shard owning the partition
+    * START: only it emits the partition deletion and the static row,
+    * so header artifacts surface exactly once across the shards.
+    * Splitting between atoms is sound because 3.0 unfiltereds are
+    * self-framed (full clustering per row, deltas against the
+    * header's EncodingStats minima, never against a running
+    * predecessor) — the property the promoted index exists to exploit
+    * (`o.a.c.db.RowIndexEntry`'s indexed entries seek the same way).
+    * Range-tombstone bounds are independent atoms on the bridge
+    * frame, so an open marker in one shard and its close in another
+    * together emit the same rows a whole-partition decode would. */
+  def readPartitionBlocks(h: Header,
+      openAt: Long => java.io.InputStream, partitionPos: Long,
+      promoted: Promoted, loAbs: Long, hiAbs: Long,
+      serveHeader: Boolean, file: String): PartitionData = {
+    val blocks = promoted.blocks
+    readPromotedSpan(h, openAt, partitionPos, promoted,
+      blocks.indexWhere(b => partitionPos + b.offset >= loAbs),
+      blocks.lastIndexWhere(b => partitionPos + b.offset < hiAbs),
+      serveHeader, file, "block-subrange read")
   }
 
   /** Block-bounded ("sliced") partition decode — the promoted-index
@@ -2113,28 +2143,47 @@ object BigFormat {
     * slices. `openAt(logicalPos)` must yield a stream positioned at an
     * absolute logical Data.db offset; streams are NOT closed here (the
     * caller owns the shared handle's lifecycle). */
-  /** Decode a BYTE-OWNED subrange of one promoted partition: the
-    * blocks whose absolute Data.db start (`partitionPos + offset`)
-    * falls in [loAbs, hiAbs). This is the sub-partition split unit —
-    * an oversized partition (one bigger than the scan's split target)
-    * stops serializing in a single task because each blind range owns
-    * exactly the promoted blocks that START inside it (the same
-    * disjoint-tiling ownership rule the split aligner uses for whole
-    * partitions). `serveHeader` marks the shard owning the partition
-    * START: only it emits the partition deletion and the static row,
-    * so header artifacts surface exactly once across the shards.
-    * Splitting between atoms is sound because 3.0 unfiltereds are
-    * self-framed (full clustering per row, deltas against the
-    * header's EncodingStats minima, never against a running
-    * predecessor) — the property the promoted index exists to exploit
-    * (`o.a.c.db.RowIndexEntry`'s indexed entries seek the same way).
-    * Range-tombstone bounds are independent atoms on the bridge
-    * frame, so an open marker in one shard and its close in another
-    * together emit the same rows a whole-partition decode would. */
-  def readPartitionBlocks(h: Header,
+  def readPartitionSliced(h: Header,
       openAt: Long => java.io.InputStream, partitionPos: Long,
-      promoted: Promoted, loAbs: Long, hiAbs: Long,
-      serveHeader: Boolean, file: String): PartitionData = try {
+      promoted: Promoted, lo: Seq[Array[Byte]],
+      hi: Seq[Array[Byte]], file: String): PartitionData = {
+    val types = h.clusteringTypes
+    // prefix-compare an IndexInfo clustering name against a bound
+    // PREFIX — one or more leading components under the declared
+    // comparators, ClusteringComparator's own prefix semantics
+    // (render∘encode identity is spec-pinned, so re-encoding the
+    // carried rendered values is exact). A strict prefix compares
+    // EQUAL here (both sides Kind.Clustering), keeping boundary-block
+    // selection conservative.
+    def cmp(name: (Seq[Option[String]], Int),
+        bound: Seq[Array[Byte]]): Int = {
+      val (values, kind) = name
+      val enc = values.zipWithIndex.map { case (v, i) =>
+        v.map(encodeValue(types(i), _))
+      }
+      compareClusterable(types, enc, kind,
+        bound.map(b => Some(b)), Kind.Clustering)
+    }
+    val blocks = promoted.blocks
+    readPromotedSpan(h, openAt, partitionPos, promoted,
+      if (lo.isEmpty) 0
+      else blocks.indexWhere(b => cmp(b.lastName, lo) >= 0),
+      if (hi.isEmpty) blocks.size - 1
+      else blocks.lastIndexWhere(b => cmp(b.firstName, hi) <= 0),
+      serveHeader = true, file, "sliced read")
+  }
+
+  /** The promoted-partition decode both entry points share: the
+    * header region (key + partition deletion, then the static row iff
+    * the first indexed unfiltered starts past them — buildPromoted's
+    * rule: statics belong to the header, never to a block), then
+    * blocks `i0..i1` as one bounded span (none when the range is
+    * empty). Only a `serveHeader` read emits the partition deletion
+    * and the static row. */
+  private def readPromotedSpan(h: Header,
+      openAt: Long => java.io.InputStream, partitionPos: Long,
+      promoted: Promoted, i0: Int, i1: Int, serveHeader: Boolean,
+      file: String, what: String): PartitionData = try {
     val head = new DataInputStream(new java.io.BufferedInputStream(
       new BoundedIn(openAt(partitionPos), promoted.headerLength)))
     val keyLen = head.readUnsignedShort()
@@ -2158,81 +2207,6 @@ object BigFormat {
       atoms += static
     }
     val blocks = promoted.blocks
-    val i0 = blocks.indexWhere(b => partitionPos + b.offset >= loAbs)
-    val i1 = blocks.lastIndexWhere(b => partitionPos + b.offset < hiAbs)
-    if (i0 >= 0 && i1 >= 0 && i0 <= i1) {
-      val span = blocks(i1).offset + blocks(i1).width - blocks(i0).offset
-      val in = new DataInputStream(new java.io.BufferedInputStream(
-        new BoundedIn(openAt(partitionPos + blocks(i0).offset), span)))
-      var done = false
-      while (!done) {
-        val flags = in.read()
-        if (flags < 0 || (flags & EndOfPartition) != 0) done = true
-        else if ((flags & IsMarker) != 0) atoms += readMarker(h, in)
-        else atoms += readRow(flags, h, in, file)
-      }
-    }
-    PartitionData(key,
-      if (serveHeader) partitionDeletion else None, atoms.result())
-  } catch {
-    case e: EOFException => throw new EOFException(
-      s"$file: truncated/corrupt SSTable data in block-subrange read " +
-        s"(${e.getMessage})")
-  }
-
-  def readPartitionSliced(h: Header,
-      openAt: Long => java.io.InputStream, partitionPos: Long,
-      promoted: Promoted, lo: Seq[Array[Byte]],
-      hi: Seq[Array[Byte]], file: String): PartitionData = try {
-    val types = h.clusteringTypes
-    // prefix-compare an IndexInfo clustering name against a bound
-    // PREFIX — one or more leading components under the declared
-    // comparators, ClusteringComparator's own prefix semantics
-    // (render∘encode identity is spec-pinned, so re-encoding the
-    // carried rendered values is exact). A strict prefix compares
-    // EQUAL here (both sides Kind.Clustering), keeping boundary-block
-    // selection conservative.
-    def cmp(name: (Seq[Option[String]], Int),
-        bound: Seq[Array[Byte]]): Int = {
-      val (values, kind) = name
-      val enc = values.zipWithIndex.map { case (v, i) =>
-        v.map(encodeValue(types(i), _))
-      }
-      compareClusterable(types, enc, kind,
-        bound.map(b => Some(b)), Kind.Clustering)
-    }
-    val blocks = promoted.blocks
-    val i0 =
-      if (lo.isEmpty) 0
-      else blocks.indexWhere(b => cmp(b.lastName, lo) >= 0)
-    val i1 =
-      if (hi.isEmpty) blocks.size - 1
-      else blocks.lastIndexWhere(b => cmp(b.firstName, hi) <= 0)
-    // header region: key + partition deletion, then the static row iff
-    // the first indexed unfiltered starts past them (buildPromoted's
-    // rule: statics belong to the header, never to a block)
-    val head = new DataInputStream(new java.io.BufferedInputStream(
-      new BoundedIn(openAt(partitionPos), promoted.headerLength)))
-    val keyLen = head.readUnsignedShort()
-    val keyBuf = new Array[Byte](keyLen)
-    head.readFully(keyBuf)
-    val key = renderValue(h.keyType, keyBuf)
-    val ldt = head.readInt()
-    val mfda = head.readLong()
-    val partitionDeletion =
-      if (mfda == NoTimestamp && ldt == NoDeletionTime) None else Some(mfda)
-    val atoms = Seq.newBuilder[Atom]
-    if (2L + keyLen + 4 + 8 < promoted.headerLength) {
-      val flags = readFlagByte(head, "static-region flags")
-      require((flags & (EndOfPartition | IsMarker)) == 0,
-        s"$file: partition $key: header region holds a non-row " +
-          s"unfiltered (flags 0x${flags.toHexString})")
-      val static = readRow(flags, h, head, file)
-      require(static.static,
-        s"$file: partition $key: non-static row inside the promoted " +
-          "header region")
-      atoms += static
-    }
     if (i0 >= 0 && i1 >= 0 && i0 <= i1) {
       val span = blocks(i1).offset + blocks(i1).width - blocks(i0).offset
       val in = new DataInputStream(new java.io.BufferedInputStream(
@@ -2247,10 +2221,11 @@ object BigFormat {
         else atoms += readRow(flags, h, in, file)
       }
     }
-    PartitionData(key, partitionDeletion, atoms.result())
+    PartitionData(key,
+      if (serveHeader) partitionDeletion else None, atoms.result())
   } catch {
     case e: EOFException => throw new EOFException(
-      s"$file: truncated/corrupt SSTable data in sliced read " +
+      s"$file: truncated/corrupt SSTable data in $what " +
         s"(${e.getMessage})")
   }
 

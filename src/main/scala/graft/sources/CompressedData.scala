@@ -67,7 +67,7 @@ object CompressedData {
     * checksummed the UNCOMPRESSED bytes and sit outside the 2.x
     * subset ([[OldFormat]] starts at "ka"). */
   def versionUsesAdler32(version: String): Boolean =
-    version.nonEmpty && version.charAt(0) < 'm'
+    Generation.isPre30(version)
 
   /** The decoded CompressionInfo.db. `offsets` index into the
     * COMPRESSED Data.db; chunk i occupies

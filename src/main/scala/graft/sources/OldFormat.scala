@@ -609,22 +609,6 @@ object OldFormat {
     (bos.toByteArray, index.result())
   }
 
-  /** Bounded view of an InputStream — the sliced reader's guard that a
-    * block-subset decode can never run past its selected span. */
-  private final class Bounded2x(in: java.io.InputStream, limit: Long)
-      extends java.io.InputStream {
-    private var left = limit
-    override def read(): Int =
-      if (left <= 0) -1
-      else { val b = in.read(); if (b >= 0) left -= 1; b }
-    override def read(b: Array[Byte], off: Int, len: Int): Int = {
-      if (left <= 0) return -1
-      val n = in.read(b, off, math.min(len.toLong, left).toInt)
-      if (n > 0) left -= n
-      n
-    }
-  }
-
   /** The 2.x sliced partition read — the reference's
     * `readIndexedColumns` (cassandra-2
     * `NoTTLSSTableNamesIterator.java:156-225`) applied to a clustering
@@ -694,7 +678,8 @@ object OldFormat {
       val span = blocks(i1).offset + blocks(i1).width - blocks(i0).offset
       val push = new java.io.PushbackInputStream(
         new java.io.BufferedInputStream(
-          new Bounded2x(openAt(pos + blocks(i0).offset), span)), 1)
+          new BigFormat.BoundedIn(openAt(pos + blocks(i0).offset), span)),
+        1)
       val in = new DataInputStream(push)
       var done = false
       while (!done) {

@@ -265,41 +265,13 @@ object SSTableBinaryV2 {
         new ThrottledBytesMetric, new ThrottleWaitNanosMetric,
         new ActivityMarksMetric, new FilesSkippedClusteringMetric)
 
-    /** One recursive listing yields the data files AND their sibling
-      * component sets WITH lengths (no per-file exists()/status RPCs
-      * at plan time — and, because the result ships inside each
-      * [[BinFilePartition]], none in the TASKS either: at a 100k-file
-      * lake, per-reader exists() probes are pure namenode chatter the
-      * planner's listing already answered). */
-    private def listWithMeta(): Seq[(String, SiblingInfo)] = {
-      val fs = FileSystem.get(java.net.URI.create(path), hconf.value)
-      val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-      val seen = scala.collection.mutable.Map.empty[String, Long]
-      val it = fs.listFiles(new HPath(path), true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile) {
-          seen(f.getPath.toString) = f.getLen
-          if (f.getPath.getName.endsWith("-Data.db"))
-            files += ((f.getPath.toString, f.getLen))
-        }
-      }
-      files.sortBy(f => generationSortKey(f._1)).toSeq.map {
-        case (p, len) =>
-          val base = p.stripSuffix("-Data.db")
-          (p, SiblingInfo(len,
-            hasIndex = seen.contains(base + "-Index.db"),
-            hasFilter = seen.contains(base + "-Filter.db"),
-            hasSummary = seen.contains(base + "-Summary.db"),
-            hasCompression = seen.contains(base + "-CompressionInfo.db"),
-            indexLen = seen.getOrElse(base + "-Index.db", -1L),
-            hasDigest = seen.contains(base + "-Digest.crc32"),
-            hasStats = seen.contains(base + "-Statistics.db")))
-      }
-    }
-
-    private[sources] def listDataFiles(): Seq[(String, SiblingInfo)] =
-      listWithMeta()
+    /** The planner's one recursive listing ([[Generation.list]]): the
+      * data files AND their sibling component sets WITH lengths — no
+      * per-file exists()/status RPCs at plan time, and, because each
+      * [[Generation]] ships inside its [[BinFilePartition]], none in
+      * the TASKS either. */
+    private[sources] def generations(): Seq[Generation] =
+      Generation.list(path, hconf.value)
 
     /** Parallelism units. Default: one InputPartition per `*-Data.db`
       * (sorted for deterministic partition ids; sibling components are
@@ -319,16 +291,16 @@ object SSTableBinaryV2 {
       * framing parses in [[SSTableComponents.indexEntries2x]]); an
       * index-less file stays one task. */
     override def planInputPartitions(): Array[InputPartition] =
-      listWithMeta().flatMap { case (f, info) =>
-        val splittable = splitBytes > 0 && info.hasIndex &&
-          info.dataLen > splitBytes
-        if (!splittable)
-          Seq(BinFilePartition(f, info = Some(info)): InputPartition)
+      generations().flatMap { g =>
+        val dataLen = g.len("Data.db")
+        val splittable = splitBytes > 0 && g.has("Index.db") &&
+          dataLen > splitBytes
+        if (!splittable) Seq(BinFilePartition(g): InputPartition)
         else {
-          val n = ((info.dataLen + splitBytes - 1) / splitBytes).toInt
-          (0 until n).map(i => BinFilePartition(f, i * splitBytes,
-            if (i == n - 1) Long.MaxValue else (i + 1) * splitBytes,
-            Some(info)): InputPartition)
+          val n = ((dataLen + splitBytes - 1) / splitBytes).toInt
+          (0 until n).map(i => BinFilePartition(g, i * splitBytes,
+            if (i == n - 1) Long.MaxValue else (i + 1) * splitBytes)
+            : InputPartition)
         }
       }.toArray
 
@@ -357,9 +329,9 @@ object SSTableBinaryV2 {
 
   private class BinMicroBatchStream(scan: BinScan)
       extends MicroBatchStream with SupportsAdmissionControl {
-    private var snapshot: Seq[(String, SiblingInfo)] = Nil
-    private def refresh(): Seq[(String, SiblingInfo)] = {
-      snapshot = scan.listDataFiles()
+    private var snapshot: Seq[Generation] = Nil
+    private def refresh(): Seq[Generation] = {
+      snapshot = scan.generations()
       snapshot
     }
     override def initialOffset(): Offset = FileIndexOffset(0)
@@ -383,9 +355,8 @@ object SSTableBinaryV2 {
       val s = start.asInstanceOf[FileIndexOffset].index
       val e = end.asInstanceOf[FileIndexOffset].index
       val files = if (snapshot.size >= e) snapshot else refresh()
-      files.slice(s, e).map { case (f, info) =>
-        BinFilePartition(f, info = Some(info)): InputPartition
-      }.toArray
+      files.slice(s, e).map(g => BinFilePartition(g): InputPartition)
+        .toArray
     }
     override def createReaderFactory(): PartitionReaderFactory =
       scan.createReaderFactory()
@@ -393,54 +364,11 @@ object SSTableBinaryV2 {
     override def stop(): Unit = ()
   }
 
-  /** Listing order for SSTable paths: by directory, then NUMERIC
-    * generation, then name. Plain lexicographic order breaks the
-    * streaming source's "new files land strictly after seen names"
-    * contract the moment a directory reaches generation 10
-    * (`nb-10-big-Data.db` sorts before `nb-2-big-Data.db` as strings),
-    * which would shift positional offsets — re-reading processed files
-    * and skipping the new one. Generation-numeric order restores it:
-    * a compaction feed's generations are monotonically increasing, so
-    * every new file sorts strictly after all seen ones. */
-  /** Format-version token of an SSTable filename. New-style (2.2+)
-    * names are `<version>-<gen>-big-<Component>`; OLD-style (≤2.1,
-    * the "ka"/"jb" eras) are `<ks>-<cf>-<version>-<gen>-<Component>`
-    * with the version third-from-last — real 2.1 files in the wild
-    * carry their keyspace/table in the name, so taking the first
-    * token would misread the era. (A keyspace literally named "big"
-    * defeats the discriminator; Cassandra's own Descriptor has the
-    * same new-style marker.) */
-  private[graft] def versionOf(name: String): String = {
-    val parts = name.split('-')
-    if (parts.contains("big") || parts.length < 3) parts.head
-    else parts(parts.length - 3)
-  }
-
-  private[graft] def generationSortKey(path: String): (String, Long, String) = {
-    val slash = path.lastIndexOf('/')
-    val dir = if (slash < 0) "" else path.substring(0, slash)
-    val name = path.substring(slash + 1)
-    val gen = "\\d+".r.findFirstIn(name).map(_.toLong).getOrElse(Long.MaxValue)
-    (dir, gen, name)
-  }
-
-  /** The planner-listed sibling component set of one Data.db, shipped
-    * inside its [[BinFilePartition]] so tasks never re-probe the
-    * filesystem for components the driver's single recursive listing
-    * already saw. `indexLen` is -1 when no Index.db exists. */
-  private[sources] case class SiblingInfo(dataLen: Long, hasIndex: Boolean,
-      hasFilter: Boolean, hasSummary: Boolean, hasCompression: Boolean,
-      indexLen: Long, hasDigest: Boolean = false,
-      hasStats: Boolean = true)
-
-  /** [start, end) is a BLIND byte range of the Data.db; the reader
-    * aligns it to partition boundaries via Index.db. (0, MaxValue) =
-    * the whole file, no index needed. `info` carries the planner's
-    * sibling listing; None (foreign callers) falls back to exists()
-    * probes in the reader. */
-  private case class BinFilePartition(file: String, start: Long = 0L,
-      end: Long = Long.MaxValue, info: Option[SiblingInfo] = None)
-      extends InputPartition
+  /** [start, end) is a BLIND byte range of `gen`'s Data.db; the
+    * reader aligns it to partition boundaries via Index.db.
+    * (0, MaxValue) = the whole file, no index needed. */
+  private case class BinFilePartition(gen: Generation, start: Long = 0L,
+      end: Long = Long.MaxValue) extends InputPartition
 
   private class BinReaderFactory(cols: Array[String],
       hconf: SerializableConfiguration, cql: Option[String],
@@ -457,8 +385,8 @@ object SSTableBinaryV2 {
     override def createReader(
         partition: InputPartition): PartitionReader[InternalRow] = {
       val p = partition.asInstanceOf[BinFilePartition]
-      new BinPartitionReader(p.file, cols, hconf.value, cql, pointKeys,
-        p.start, p.end, p.info, slice, verify, sliceSpace, tokenRange,
+      new BinPartitionReader(p.gen, cols, hconf.value, cql, pointKeys,
+        p.start, p.end, slice, verify, sliceSpace, tokenRange,
         tokenSpace, scrub, maxBytesPerSec, activity)
     }
   }
@@ -467,12 +395,11 @@ object SSTableBinaryV2 {
     * one Cassandra partition decoded at a time, its bridge rows
     * buffered (memory bound = one partition, the reference's own
     * bound) and drained before the next partition is touched. */
-  private class BinPartitionReader(file: String, cols: Array[String],
+  private class BinPartitionReader(gen: Generation, cols: Array[String],
       conf: org.apache.hadoop.conf.Configuration,
       cql: Option[String] = None,
       pointKeys: Option[Seq[String]] = None,
       rangeStart: Long = 0L, rangeEnd: Long = Long.MaxValue,
-      info: Option[SiblingInfo] = None,
       slice: (Option[String], Option[String]) = (None, None),
       verify: Boolean = false,
       sliceSpace: Option[String] = None,
@@ -487,7 +414,8 @@ object SSTableBinaryV2 {
       * the file disjointly, so every partition has exactly one owner
       * regardless of alignment. */
     private val ranged = rangeStart != 0L || rangeEnd != Long.MaxValue
-    private val sstable = file.split('/').takeRight(2).mkString("/")
+    private val file = gen.dataPath
+    private val sstable = gen.sstable
     private val fs = FileSystem.get(java.net.URI.create(file), conf)
     /** S11 literal — the scanner's RateLimiter
       * (`NoTTLReader.getScanner(RateLimiter)` /
@@ -530,64 +458,39 @@ object SSTableBinaryV2 {
     // maxCompressedSize word, the m-series (3.x) does not — the row
     // codec itself is the same 3.0 storage engine either way, so one
     // decoder serves both eras
-    private val version = versionOf(file.split('/').last)
-    private def sibling(suffix: String): HPath =
-      new HPath(file.stripSuffix("-Data.db") + suffix)
-    /** Component presence, answered from the planner-shipped listing
-      * when available — the reader's hot construction path issues NO
-      * per-file exists() RPCs under the DSv2 scan (the fallback
-      * serves foreign/spec callers constructing readers directly). */
-    private def hasSibling(suffix: String): Boolean = info match {
-      case Some(i) => suffix match {
-        case "-Index.db" => i.hasIndex
-        case "-Filter.db" => i.hasFilter
-        case "-Summary.db" => i.hasSummary
-        case "-CompressionInfo.db" => i.hasCompression
-        case "-Digest.crc32" => i.hasDigest
-        case "-Statistics.db" => i.hasStats
-        case _ => fs.exists(sibling(suffix))
-      }
-      case None => fs.exists(sibling(suffix))
-    }
+    private val version = gen.version
+    // component presence and lengths come from `gen`, the planner's
+    // listing: the reader issues no per-file exists()/status probes
+    // for them
+    private def sibling(c: String): HPath = new HPath(gen.path(c))
     private var cacheHits = 0L
     private var cacheMisses = 0L
-    /** The generation's index summary: Summary.db when present (modern
-      * era — the 2.x IndexSummary layout predates the 3.0 serializer,
-      * so a foreign 2.x summary is never parsed), else REBUILT from
-      * Index.db at MinIndexInterval sampling
-      * ([[SSTableComponents.rebuildSummary]] — `SSTableReader
-      * .buildSummary`'s recovery path, both eras). The rebuilt
-      * serialized form is cached under a synthetic component name, so
-      * the one-pass index stream is paid once per executor and every
-      * later task gets summary economics (file-level token elision,
-      * bounded point/split index reads) as if Summary.db existed. */
-    /** Memoized: up to three sites consult the summary per task
-      * (token-span elision, split alignment, point/split index reads);
-      * the getFileStatus RPC + parse are paid once per reader. */
-    private lazy val summaryMemo: Option[SSTableComponents.Summary] =
-      summaryOrRebuilt0()
-    /** The LITERAL pre-3.0 Summary.db read (`NoTTLReader.loadSummary`,
-      * `NoTTLReader.java:766-814`) — the one component this engine
-      * previously always regenerated. A malformed/foreign summary
-      * degrades to None and the Index.db rebuild takes over, the
+    /** The generation's index summary: Summary.db when present, parsed
+      * for its era — the pre-3.0 read is the LITERAL
+      * `NoTTLReader.loadSummary` (`NoTTLReader.java:766-814`), and a
+      * malformed/foreign 2.x summary degrades to the rebuild, the
       * reference's own corrupted-summary posture (`:798-806` deletes
-      * and resamples). */
-    private lazy val parsed2xSummary: Option[SSTableComponents.Summary] =
-      try Some(SSTableComponents.readSummary2x(
-        readSibling(sibling("-Summary.db"))))
-      catch { case scala.util.control.NonFatal(_) => None }
-    private def summaryOrRebuilt(): Option[SSTableComponents.Summary] =
-      summaryMemo
-    private def summaryOrRebuilt0(): Option[SSTableComponents.Summary] =
-      if (!oldEra && hasSibling("-Summary.db"))
-        Some(SSTableComponents.readSummary(
-          readSibling(sibling("-Summary.db"))))
-      else if (oldEra && hasSibling("-Summary.db") &&
-        parsed2xSummary.isDefined)
-        parsed2xSummary
-      else if (!hasSibling("-Index.db")) None
+      * and resamples) — else REBUILT from Index.db at
+      * MinIndexInterval sampling ([[SSTableComponents.rebuildSummary]]
+      * — `SSTableReader.buildSummary`'s recovery path, both eras). The
+      * rebuilt serialized form is cached under a synthetic component
+      * name, so the one-pass index stream is paid once per executor
+      * and every later task gets summary economics (file-level token
+      * elision, bounded point/split index reads) as if Summary.db
+      * existed. Memoized: up to three sites consult the summary per
+      * task (token-span elision, split alignment, point/split index
+      * reads). */
+    private lazy val summaryOrRebuilt: Option[SSTableComponents.Summary] = {
+      val stored =
+        if (!gen.has("Summary.db")) None
+        else {
+          val parsed = scala.util.Try(
+            Generation.readSummary(readSibling("Summary.db"), oldEra))
+          if (oldEra) parsed.toOption else Some(parsed.get)
+        }
+      if (stored.isDefined || !gen.has("Index.db")) stored
       else {
-        val indexP = sibling("-Index.db")
+        val indexP = sibling("Index.db")
         val st = fs.getFileStatus(indexP)
         val (bytes, hit) = SSTableBinaryV2.ComponentCache.getFlagged(
           indexP.toString + "#rebuilt-summary", st.getLen,
@@ -612,15 +515,15 @@ object SSTableBinaryV2 {
         if (hit) cacheHits += 1 else cacheMisses += 1
         Some(SSTableComponents.readSummary(bytes))
       }
-    private def readSibling(path: HPath): Array[Byte] = {
+    }
+    /** Component `c` whole, through the executor's [[ComponentCache]]
+      * and the guarded sidecar read. */
+    private def readSibling(c: String): Array[Byte] = {
+      val path = sibling(c)
       val st = fs.getFileStatus(path)
       val (bytes, hit) = SSTableBinaryV2.ComponentCache
-        .getFlagged(path.toString, st.getLen, st.getModificationTime) {
-          val buf = new Array[Byte](st.getLen.toInt)
-          val in = fs.open(path)
-          try in.readFully(0, buf) finally in.close()
-          buf
-        }
+        .getFlagged(path.toString, st.getLen, st.getModificationTime)(
+          Generation.readAll(fs, path.toString, st.getLen))
       if (hit) cacheHits += 1 else cacheMisses += 1
       bytes
     }
@@ -629,7 +532,7 @@ object SSTableBinaryV2 {
       * via the `cql` option (2.x files carry no serialization
       * header; the reference's cassandra-2 module loads live system
       * tables instead, `Cassandra2TTLRemover.java:48`). */
-    private val oldEra = version.nonEmpty && version.charAt(0) < 'm'
+    private val oldEra = gen.oldEra
     /** Open-time ring validation (`SSTableReader.open` refuses a
       * file whose Statistics.db declares a foreign partitioner — the
       * C2 fork keeps the check, `NoTTLReader.java:357-408`): serving
@@ -657,12 +560,12 @@ object SSTableBinaryV2 {
         // Statistics.db carries the SAME VALIDATION declaration (no
         // checksums) — a foreign-ring 2.x file must refuse exactly
         // like a modern one
-        if (hasSibling("-Statistics.db"))
+        if (gen.has("Statistics.db"))
           validateDeclaredRing(
-            readSibling(sibling("-Statistics.db")), checksummed = false)
+            readSibling("Statistics.db"), checksummed = false)
         null
       } else {
-        val statsBytes = readSibling(sibling("-Statistics.db"))
+        val statsBytes = readSibling("Statistics.db")
         val checksummed = BigFormat.versionHasMetadataChecksum(version)
         validateDeclaredRing(statsBytes, checksummed)
         BigFormat.readStats(statsBytes, checksummed)
@@ -711,8 +614,7 @@ object SSTableBinaryV2 {
       * by component presence, exactly how Cassandra itself decides
       * (`Descriptor`'s component set), so a compressed table can
       * never reach the row decoder as garbage. */
-    private lazy val onDiskLen: Long = info.map(_.dataLen)
-      .getOrElse(fs.getFileStatus(new HPath(file)).getLen)
+    private val onDiskLen: Long = gen.len("Data.db")
 
     /** The decoded CompressionInfo.db sibling, once per file — the
       * chunk map every compressed access path (full scan, point seek,
@@ -722,9 +624,8 @@ object SSTableBinaryV2 {
       * chunk ([[CompressedData.versionUsesAdler32]]; the reference
       * reads both natively, `NoTTLReader.java:343,623`). */
     private lazy val compressionMeta: Option[CompressedData.Meta] = {
-      val ci = sibling("-CompressionInfo.db")
-      if (!hasSibling("-CompressionInfo.db")) None
-      else Some(CompressedData.readMeta(readSibling(ci),
+      if (!gen.has("CompressionInfo.db")) None
+      else Some(CompressedData.readMeta(readSibling("CompressionInfo.db"),
         CompressedData.versionHasMaxCompressedSize(version), file,
         CompressedData.versionUsesAdler32(version)))
     }
@@ -750,9 +651,7 @@ object SSTableBinaryV2 {
       * false positives only cost the Index.db read. */
     private val lookup: Option[Seq[(Long, Array[Byte])]] =
       pointKeys.flatMap { keys =>
-        val filterP = sibling("-Filter.db")
-        val indexP = sibling("-Index.db")
-        if (!hasSibling("-Filter.db") || !hasSibling("-Index.db")) None
+        if (!gen.has("Filter.db") || !gen.has("Index.db")) None
         else {
           // the serialized bloom LAYOUT (hashCount + word array) is
           // identical across 2.1→3.x, but the BIT derivation is not:
@@ -766,7 +665,7 @@ object SSTableBinaryV2 {
             scala.util.Try(BigFormat.encodeValue(keyType, k))
               .toOption)
           val bloom = SSTableComponents.readFilter(
-            readSibling(filterP), oldHashOrder = oldEra)
+            readSibling("Filter.db"), oldHashOrder = oldEra)
           val candidates = keyBytes.filter(bloom.mightContain)
           if (candidates.isEmpty) Some(Nil)
           else {
@@ -775,7 +674,7 @@ object SSTableBinaryV2 {
             // pushed clustering slice can seek WITHIN the partition; a
             // token range composes (a matched key OUTSIDE the ring
             // bounds must not serve — same exactness as every path)
-            Some(readIndexFor(candidates, indexP)
+            Some(readIndexFor(candidates)
               .collect { case (k, pos, prom) if wanted(k.toSeq) &&
                 tokenIn(BigFormat.murmur3Token(k)) =>
                 (pos, prom)
@@ -867,24 +766,23 @@ object SSTableBinaryV2 {
       * interval is included conservatively because the summary marks
       * order by (token, key) while we search by token alone).
       * Without a summary, the full Index.db parses. */
-    private def readIndexFor(candidates: Seq[Array[Byte]],
-        indexP: HPath): Seq[BigFormat.IndexEntry] = {
+    private def readIndexFor(
+        candidates: Seq[Array[Byte]]): Seq[BigFormat.IndexEntry] = {
       // 2.x: fixed-width entry framing — the summary-bounded slices
       // below parse with the MODERN framing, so the whole (small)
       // component parses instead
       if (oldEra)
-        return SSTableComponents.readIndex2x(readSibling(indexP), file)
+        return SSTableComponents.readIndex2x(readSibling("Index.db"), file)
       // Summary.db when present, else rebuilt from the index (the
       // rebuild's one full read is this same component — no loss on
       // the first probe, and every later probe reads O(interval))
-      val summary = summaryOrRebuilt().getOrElse(
-        return SSTableComponents.readIndex(readSibling(indexP), file))
+      val summary = summaryOrRebuilt.getOrElse(
+        return SSTableComponents.readIndex(readSibling("Index.db"), file))
       val marks = summary.sampled.map { case (k, ip) =>
         (BigFormat.murmur3Token(k), ip)
       }
       if (marks.isEmpty) return Nil
-      val idxLen = info.map(_.indexLen).filter(_ >= 0)
-        .getOrElse(fs.getFileStatus(indexP).getLen)
+      val idxLen = gen.len("Index.db")
       val ranges = candidates.flatMap { kb =>
         val t = BigFormat.murmur3Token(kb)
         val i = marks.lastIndexWhere(_._1 <= t)
@@ -902,7 +800,7 @@ object SSTableBinaryV2 {
         case (acc @ ((s0, e0) :: rest), (s1, e1)) =>
           if (s1 <= e0) (s0, math.max(e0, e1)) :: rest else (s1, e1) :: acc
       }.reverse
-      val in = fs.open(indexP)
+      val in = fs.open(sibling("Index.db"))
       try merged.flatMap { case (start, end) =>
         val buf = new Array[Byte]((end - start).toInt)
         in.readFully(start, buf)
@@ -964,8 +862,8 @@ object SSTableBinaryV2 {
         uncStart: Long, uncEnd: Long)
 
     private def alignRangePlan(): Option[RangePlan] = {
-      val indexP = sibling("-Index.db")
-      require(hasSibling("-Index.db"),
+      val indexP = sibling("Index.db")
+      require(gen.has("Index.db"),
         s"$file: a split scan needs the Index.db sidecar")
       val (uncStart, uncEnd) = logicalRange().getOrElse(return None)
       val dataLen = compressionMeta.map(_.dataLength).getOrElse(onDiskLen)
@@ -979,7 +877,7 @@ object SSTableBinaryV2 {
           // modern file gets it via the cached rebuild
           if (oldEra) 0L
           else {
-            val marks = summaryOrRebuilt().map(_.sampled.map(_._2))
+            val marks = summaryOrRebuilt.map(_.sampled.map(_._2))
               .getOrElse(Nil)
             def dataPosAt(ip: Long): Long = {
               in.seek(ip)
@@ -1049,23 +947,6 @@ object SSTableBinaryV2 {
       } finally in.close()
     }
 
-    /** Caps a stream at the range's byte budget so the partition
-      * decoder sees clean EOF exactly at the split boundary. */
-    private class BoundedStream(in: java.io.InputStream,
-        private var remaining: Long) extends java.io.InputStream {
-      override def read(): Int =
-        if (remaining <= 0) -1
-        else { val b = in.read(); if (b >= 0) remaining -= 1; b }
-      override def read(buf: Array[Byte], off: Int, len: Int): Int =
-        if (remaining <= 0) -1
-        else {
-          val n = in.read(buf, off, math.min(len.toLong, remaining).toInt)
-          if (n > 0) remaining -= n
-          n
-        }
-      override def close(): Unit = in.close()
-    }
-
     /** Read-side data-integrity pass (`.option("verify", "true")` /
       * the CLI's `--verify`): CRC32 the AS-ON-DISK Data.db bytes and
       * compare with the `Digest.crc32` sibling —
@@ -1078,9 +959,9 @@ object SSTableBinaryV2 {
       * without decompressing (chunk CRCs separately guard the
       * decompression path). */
     if (verify && rangeStart == 0L) {
-      require(hasSibling("-Digest.crc32"),
+      require(gen.has("Digest.crc32"),
         s"$file: verify requested but no Digest.crc32 sibling exists")
-      val expected = new String(readSibling(sibling("-Digest.crc32")),
+      val expected = new String(readSibling("Digest.crc32"),
         java.nio.charset.StandardCharsets.US_ASCII).trim
       val crc = new java.util.zip.CRC32()
       // through the throttle like every other Data.db byte — a
@@ -1157,7 +1038,7 @@ object SSTableBinaryV2 {
       * scales with the file) and ranged tasks claim entries by the
       * same logical-offset ownership the split aligner uses. */
     private def sliceScan(): Iterator[Iterator[InternalRow]] = {
-      val indexIn = fs.open(sibling("-Index.db"))
+      val indexIn = fs.open(sibling("Index.db"))
       indexStream = indexIn
       val din = new java.io.DataInputStream(
         new java.io.BufferedInputStream(indexIn))
@@ -1211,7 +1092,7 @@ object SSTableBinaryV2 {
     private def sliceScanEligible: Boolean =
       (sliceBounds._1.nonEmpty || sliceBounds._2.nonEmpty ||
         tokenRange.isDefined || scrub) &&
-        hasSibling("-Index.db")
+        gen.has("Index.db")
 
     /** FILE-level clustering-slice skip — Cassandra's
       * `ClusteringIndexSliceFilter.shouldInclude(sstable)`: the
@@ -1230,11 +1111,11 @@ object SSTableBinaryV2 {
     private lazy val fileClusteringDisjoint: Boolean = {
       if (oldEra || header == null || header.clusteringTypes.isEmpty ||
         (sliceBounds._1.isEmpty && sliceBounds._2.isEmpty) ||
-        !hasSibling("-Statistics.db")) false
+        !gen.has("Statistics.db")) false
       else {
         val bounds =
           try BigFormat.readStatsModern(
-            readSibling(sibling("-Statistics.db")), version)
+            readSibling("Statistics.db"), version)
           catch { case scala.util.control.NonFatal(_) => None }
         bounds match {
           case None => false
@@ -1277,7 +1158,7 @@ object SSTableBinaryV2 {
         // elision: the summary rebuilds from Index.db once per
         // executor and caches — losing Summary.db must not turn a
         // ranged scan back into reading every file
-        summaryOrRebuilt() match {
+        summaryOrRebuilt match {
           case None => false
           case Some(sm) if sm.sampled.isEmpty => false
           case Some(sm) =>
@@ -1404,7 +1285,9 @@ object SSTableBinaryV2 {
             // head shard has been fully consumed
             val streamIt: Iterator[Iterator[InternalRow]] =
               plan.stream.iterator.flatMap { case (seekPos, stopPos) =>
-                fullStream = new BoundedStream(openDataAt(seekPos),
+                // bounded at the range's end, so the partition decoder
+                // sees clean EOF exactly at the split boundary
+                fullStream = new BigFormat.BoundedIn(openDataAt(seekPos),
                   stopPos - seekPos)
                 if (oldEra)
                   OldFormat.partitions(oldSchema, fullStream, file)
@@ -3679,11 +3562,8 @@ object SSTableBinaryV2 {
       val clTypes = Seq(BigFormat.LongType)
       var promotedSeen = 0
       idxFiles.foreach { p =>
-        val in = fs.open(p)
-        val bytes = try {
-          val b = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-          in.readFully(0, b); b
-        } finally in.close()
+        val bytes = Generation.readAll(fs, p.toString,
+          fs.getFileStatus(p).getLen)
         SSTableComponents.readIndex(bytes, p.toString).foreach {
           case (_, _, promoted) if promoted.nonEmpty =>
             promotedSeen += 1
@@ -3772,11 +3652,8 @@ object SSTableBinaryV2 {
       var strictSubsets = 0
       fs.listStatus(new HPath(dir)).map(_.getPath)
         .filter(_.getName.endsWith("-Index.db")).foreach { p =>
-          val in = fs.open(p)
-          val bytes = try {
-            val b = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-            in.readFully(0, b); b
-          } finally in.close()
+          val bytes = Generation.readAll(fs, p.toString,
+            fs.getFileStatus(p).getLen)
           SSTableComponents.readIndex(bytes, p.toString).foreach {
             case (_, _, promoted) if promoted.nonEmpty =>
               val pr = BigFormat.readPromoted(promoted, clTypes,

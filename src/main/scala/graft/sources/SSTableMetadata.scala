@@ -1,16 +1,16 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.util.SerializableConfiguration
 
 /** `sstablemetadata`'s role re-expressed for a lake: one inventory row
   * per generation, read from SIDECARS ONLY — Data.db is never opened,
   * so a 100 TB table inventories at the cost of its metadata (~1-2%
   * of bytes, and only the index among those). The driver does ONE
-  * recursive listing (catalog-sized — the same contract as the
-  * connector's planner, `SSTableBinaryV2` listing); every component
-  * read happens executor-side, one task wave across the lake.
+  * recursive listing (catalog-sized — the connector planner's own,
+  * [[Generation.list]]); every component read happens executor-side,
+  * one task wave across the lake.
   *
   * Columns and their sources:
   *   - `sstable`         dir/name, the connector frames' identity
@@ -83,27 +83,41 @@ object SSTableMetadata {
       min_clustering: Option[String] = None,
       max_clustering: Option[String] = None)
 
-  /** One recursive driver-side listing grouped into generations —
-    * catalog-sized, the same contract as the connector's planner. */
-  private def listGenerations(root: String,
-      conf: org.apache.hadoop.conf.Configuration)
-      : Seq[(String, Seq[String])] = {
-    val fs = FileSystem.get(java.net.URI.create(root), conf)
-    val all = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(new HPath(root), true)
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.isFile && !f.getPath.getName.startsWith("."))
-        all += f.getPath.toString
-    }
-    all.groupBy { p =>
-      val name = p.split('/').last
-      val comp = name.split('-').last
-      p.stripSuffix("-" + comp)
-    }.collect {
-      case (base, comps) if comps.exists(_.endsWith("-Data.db")) =>
-        (base + "-Data.db", comps.toSeq.sorted)
-    }.toSeq.sortBy(_._1)
+  /** `root`'s generations: the one driver-side listing, catalog-sized
+    * — the connector planner's own ([[Generation.list]]). */
+  private def generations(spark: SparkSession,
+      root: String): Seq[Generation] =
+    Generation.list(root, spark.sessionState.newHadoopConf())
+
+  /** The sidecar tools' one fan-out: `f` runs executor-side once per
+    * generation, with the filesystem its components live on — one
+    * task wave across the lake (at most defaultParallelism tasks). */
+  private def fanOut[T: Encoder](spark: SparkSession,
+      lake: Seq[Generation])(
+      f: (Generation, FileSystem) => IterableOnce[T]): Dataset[T] = {
+    val conf = spark.sparkContext.broadcast(new SerializableConfiguration(
+      spark.sessionState.newHadoopConf()))
+    spark.createDataset(lake)(Encoders.product[Generation])
+      .repartition(math.min(lake.size.max(1),
+        spark.sparkContext.defaultParallelism))
+      .flatMap(g => f(g,
+        FileSystem.get(java.net.URI.create(g.dataPath), conf.value.value)))
+  }
+
+  /** The offline surgeries write FLAT by component name (one table
+    * directory is the tools' unit of operation): a recursive listing
+    * spanning several directories (a keyspace root, or a table with
+    * snapshots/backups subdirs) could hold same-named generations
+    * whose flat copies would clobber each other, so that shape
+    * refuses up front instead of interleaving silently. */
+  private def requireOneTableDir(gens: Seq[Generation], root: String,
+      tool: String): Unit = {
+    val parents =
+      gens.map(_.dataPath.split('/').dropRight(1).mkString("/")).distinct
+    require(parents.size <= 1,
+      s"$tool targets ONE table directory; $root spans " +
+        s"${parents.size} (run per directory): " +
+        parents.sorted.take(3).mkString(", "))
   }
 
   /** With `audit` (the registered query's mode), every generation's
@@ -117,31 +131,18 @@ object SSTableMetadata {
   def describe(spark: SparkSession, root: String,
       audit: Boolean = false): DataFrame = {
     import spark.implicits._
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
-    spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        describeOne(dataPath, comps, bc.value.value, audit)
-      }
-      .toDF()
+    fanOut(spark, generations(spark, root))((g, fs) =>
+      Some(describeOne(g, fs, audit))).toDF()
   }
 
-  private def describeOne(dataPath: String, comps: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration,
+  private def describeOne(g: Generation, fs: FileSystem,
       audit: Boolean = false): GenerationMeta = {
-    val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-    val name = dataPath.split('/').last
-    val version = SSTableBinaryV2.versionOf(name)
-    val oldEra = version.nonEmpty && version.charAt(0) < 'm'
-    val base = dataPath.stripSuffix("-Data.db")
-    def comp(suffix: String): Option[String] =
-      comps.find(_ == base + suffix)
+    val dataPath = g.dataPath
+    val version = g.version
+    val oldEra = g.oldEra
     val statsBytes: Option[(String, Array[Byte])] =
-      comp("-Statistics.db").map(p => (p, readAll(fs, p)))
+      Option.when(g.has("Statistics.db"))(
+        (g.path("Statistics.db"), g.read(fs, "Statistics.db")))
     val header: Option[BigFormat.Header] =
       if (oldEra) None
       else statsBytes.map { case (_, b) => BigFormat.readStats(
@@ -182,7 +183,8 @@ object SSTableMetadata {
     // the audit mode's independent ground truth for the Summary facts
     var idxFirst: Option[Array[Byte]] = None
     var idxLast: Option[Array[Byte]] = None
-    val nPartitions: Option[Long] = comp("-Index.db").map { p =>
+    val nPartitions: Option[Long] = Option.when(g.has("Index.db")) {
+      val p = g.path("Index.db")
       val in = fs.open(new HPath(p))
       try {
         val din = new java.io.DataInputStream(
@@ -200,23 +202,14 @@ object SSTableMetadata {
         n
       } finally in.close()
     }
-    val compressor: Option[String] = comp("-CompressionInfo.db").map {
-      p => CompressedData.readMeta(readAll(fs, p),
-        CompressedData.versionHasMaxCompressedSize(version), p,
-        CompressedData.versionUsesAdler32(version)).compressor
-    }
-    // era dispatch on the summary layout: modern files use the 3.0
-    // serializer, pre-3.0 files the 2.1 `IndexSummary` layout
-    // ([[SSTableComponents.readSummary2x]] — `loadSummary`'s literal
-    // read); a malformed 2.x summary degrades to no summary facts,
-    // the reference's own corrupted-summary posture
-    val summary =
-      if (oldEra)
-        comp("-Summary.db").flatMap(p =>
-          scala.util.Try(
-            SSTableComponents.readSummary2x(readAll(fs, p))).toOption)
-      else comp("-Summary.db").map(p =>
-        SSTableComponents.readSummary(readAll(fs, p)))
+    val compressor: Option[String] =
+      Option.when(g.has("CompressionInfo.db")) {
+        CompressedData.readMeta(g.read(fs, "CompressionInfo.db"),
+          CompressedData.versionHasMaxCompressedSize(version),
+          g.path("CompressionInfo.db"),
+          CompressedData.versionUsesAdler32(version)).compressor
+      }
+    val summary = summaryOf(g, fs)
     if (audit) summary.foreach { s =>
       def eq(a: Option[Array[Byte]], b: Array[Byte]) =
         a.exists(java.util.Arrays.equals(_, b))
@@ -256,21 +249,14 @@ object SSTableMetadata {
       }
     val clTypes: Seq[String] =
       header.map(_.clusteringTypes).getOrElse(Nil)
-    def renderBoundList(vs: Seq[Seq[Byte]]): Option[String] =
-      if (vs.isEmpty) None
-      else Some(vs.zipWithIndex.map { case (v, i) =>
-        scala.util.Try(BigFormat.renderValue(
-          clTypes.lift(i).getOrElse(BigFormat.Utf8Type), v.toArray))
-          .getOrElse(v.map("%02x".format(_)).mkString)
-      }.mkString(":"))
-    val minClustering = renderBoundList(
+    val minClustering = renderBounds(clTypes,
       statsModern.map(_.minClusteringValues)
         .orElse(stats2x.map(_.minColumnNames)).getOrElse(Nil))
-    val maxClustering = renderBoundList(
+    val maxClustering = renderBounds(clTypes,
       statsModern.map(_.maxClusteringValues)
         .orElse(stats2x.map(_.maxColumnNames)).getOrElse(Nil))
     GenerationMeta(
-      sstable = dataPath.split('/').takeRight(2).mkString("/"),
+      sstable = g.sstable,
       n_partitions = nPartitions,
       min_writetime_us =
         header.map(_.minTimestampUs).orElse(stats2x.map(_.minTimestampUs)),
@@ -279,7 +265,7 @@ object SSTableMetadata {
       // inventory surfaces the sentinel as NULL, not as a minimum
       min_ttl_s = header.map(_.minTtlS).filter(_ != 0),
       compressor = compressor,
-      n_components = comps.size,
+      n_components = g.components.size,
       first_key = summary.flatMap(s => renderKey(s.firstKey)),
       last_key = summary.flatMap(s => renderKey(s.lastKey)),
       est_keys_max = summary.map(s =>
@@ -292,34 +278,33 @@ object SSTableMetadata {
       max_clustering = maxClustering)
   }
 
-  /** Registered `src_sstable_metadata`: the sidecar-only inventory
-    * over sink-written generation sets — uncompressed, compressed
-    * (the lz4 rewrite shows its compressor and one extra component),
-    * and a pre-3.0 ka set (whose 2.x StatsMetadata supplies
-    * `min_writetime_us` where the era has no serialization header).
-    * The oracle replays the fixture arithmetic per generation: exact
-    * partition counts, stats minima, component census. The
-    * no-Data.db property is ORACLE-GATED, not just spec-gated: every
-    * Data.db is garbled before describing, so a describe() that ever
-    * starts opening data files fails the correctness run loudly.
-    * The token-order columns (`first_key`/`last_key`/`est_keys_max`)
-    * are ALSO oracle-gated — audit mode requires each Summary fact to
-    * match the independently streamed Index.db ground truth while the
-    * row is produced — then dropped, since DuckDB cannot replay the
-    * key rendering itself. */
-  /** Whole sidecar into memory — the ONE read path every inventory
-    * surface shares (sidecars are KB-to-MB by construction; a length
-    * past Int.MaxValue is a corrupt listing and refuses loudly rather
-    * than silently truncating the allocation). */
-  private def readAll(fs: FileSystem, p: String): Array[Byte] = {
-    val st = fs.getFileStatus(new HPath(p))
-    require(st.getLen <= Int.MaxValue,
-      s"$p: sidecar too large to materialize (${st.getLen} bytes)")
-    val buf = new Array[Byte](st.getLen.toInt)
-    val in = fs.open(new HPath(p))
-    try in.readFully(0, buf) finally in.close()
-    buf
-  }
+  /** The generation's Summary.db parsed for its era
+    * ([[Generation.readSummary]] — the 2.x layout is `loadSummary`'s
+    * literal read): None when absent, and a malformed 2.x summary
+    * degrades to None too, the reference's own corrupted-summary
+    * posture; a malformed modern one refuses. */
+  private def summaryOf(g: Generation,
+      fs: FileSystem): Option[SSTableComponents.Summary] =
+    if (!g.has("Summary.db")) None
+    else {
+      val parsed = scala.util.Try(
+        Generation.readSummary(g.read(fs, "Summary.db"), g.oldEra))
+      if (g.oldEra) parsed.toOption else Some(parsed.get)
+    }
+
+  /** Clustering-value bounds rendered under `types` and ':'-joined,
+    * None when the file declares none. A value whose bytes don't parse
+    * under its declared type (a foreign file) serves hex rather than
+    * refusing the whole row — the value is still the file's truth; a
+    * column past the declared types renders as UTF-8. */
+  private def renderBounds(types: Seq[String],
+      vs: Seq[Seq[Byte]]): Option[String] =
+    if (vs.isEmpty) None
+    else Some(vs.zipWithIndex.map { case (v, i) =>
+      scala.util.Try(BigFormat.renderValue(
+        types.lift(i).getOrElse(BigFormat.Utf8Type), v.toArray))
+        .getOrElse(v.map("%02x".format(_)).mkString)
+    }.mkString(":"))
 
   /** The COMPACTION component's raw bytes out of a Statistics.db —
     * the era-dispatched extraction [[describeOne]] and
@@ -352,25 +337,15 @@ object SSTableMetadata {
   private def gatherSketches(spark: SparkSession, root: String)
       : Seq[(Option[Array[Byte]], Option[Long], Option[Long])] = {
     import spark.implicits._
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
-    spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val m = describeOne(dataPath, comps, bc.value.value)
-        val conf = bc.value.value
-        val fsx = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val version = SSTableBinaryV2.versionOf(dataPath.split('/').last)
-        val oldEra = version.nonEmpty && version.charAt(0) < 'm'
-        val base = dataPath.stripSuffix("-Data.db")
-        val sketchBytes = comps.find(_ == base + "-Statistics.db")
-          .flatMap(p =>
-            compactionBytes(readAll(fsx, p), p, version, oldEra))
-        SketchRow(m.sstable, sketchBytes, m.est_keys_max, m.n_partitions)
-      }
+    fanOut(spark, generations(spark, root)) { (g, fs) =>
+      val m = describeOne(g, fs)
+      val sketchBytes =
+        if (!g.has("Statistics.db")) None
+        else compactionBytes(g.read(fs, "Statistics.db"),
+          g.path("Statistics.db"), g.version, g.oldEra)
+      Some(SketchRow(m.sstable, sketchBytes, m.est_keys_max,
+        m.n_partitions))
+    }
       .collect()
       .toSeq
       .map(r => (r.sketch, r.est_keys_max, r.n_exact))
@@ -399,10 +374,6 @@ object SSTableMetadata {
   def describeRange(spark: SparkSession, root: String,
       tokenLo: Long, tokenHi: Long, downsample: Int = 1): DataFrame = {
     import spark.implicits._
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
     // inclusive [lo, hi] as the reference's (start-exclusive,
     // end-inclusive] ranges: (lo-1, hi], MIN-open when lo is the ring
     // minimum (no Murmur3Partitioner key carries token MIN — the
@@ -413,36 +384,16 @@ object SSTableMetadata {
       else Seq((
         if (tokenLo == Long.MinValue) Long.MinValue else tokenLo - 1,
         tokenHi))
-    spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .flatMap { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val name = dataPath.split('/').last
-        val version = SSTableBinaryV2.versionOf(name)
-        val oldEra = version.nonEmpty && version.charAt(0) < 'm'
-        val base = dataPath.stripSuffix("-Data.db")
-        // era-dispatched summary read: the 2.x layout parses via
-        // [[SSTableComponents.readSummary2x]] (malformed degrades to
-        // a skipped row, never a killed inventory)
-        comps.find(_ == base + "-Summary.db")
-          .flatMap { p =>
-            val bytes = readAll(fs, p)
-            if (oldEra)
-              scala.util.Try(
-                SSTableComponents.readSummary2x(bytes)).toOption
-            else Some(SSTableComponents.readSummary(bytes))
-          }
-          .map { s0 =>
-            val s = SSTableComponents.downsampleSummary(s0, downsample)
-            RangeEstimate(
-              dataPath.split('/').takeRight(2).mkString("/"),
-              SSTableComponents.estimatedKeysForRanges(s, ranges),
-              s.sampled.size)
-          }
+    // a malformed 2.x summary degrades to a skipped row, never a
+    // killed inventory
+    fanOut(spark, generations(spark, root)) { (g, fs) =>
+      summaryOf(g, fs).map { s0 =>
+        val s = SSTableComponents.downsampleSummary(s0, downsample)
+        RangeEstimate(g.sstable,
+          SSTableComponents.estimatedKeysForRanges(s, ranges),
+          s.sampled.size)
       }
-      .toDF()
+    }.toDF()
   }
 
   /** Registered `src_sstable_droppable` — the reference's
@@ -462,37 +413,41 @@ object SSTableMetadata {
     import spark.implicits._
     val outKa = SSTableBinaryV2.writeOldFixture(spark, sfDir)
     val root = outKa.resolve("documents").toString
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
-    val rows = spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val base = dataPath.stripSuffix("-Data.db")
-        val p = base + "-Statistics.db"
-        val s = OldFormat.readStats2x(readAll(fs, p), p)
-        val beforeAll = OldFormat.droppableTombstonesBefore(
-          s, s.minTimestampUs / 1000000.0 - 1.0)
-        val afterAll = OldFormat.droppableTombstonesBefore(
-          s, s.maxLocalDeletionTimeS + 1.0)
-        val mid = OldFormat.droppableTombstonesBefore(s,
-          (s.minTimestampUs / 1000000.0 + s.maxLocalDeletionTimeS) / 2.0)
-        require(mid >= beforeAll && mid <= afterAll,
-          s"$dataPath: histogram sum not monotone " +
-            s"($beforeAll, $mid, $afterAll)")
-        (dataPath.split('/').takeRight(2).mkString("/"),
-          beforeAll, afterAll, s.estColumnsTotal,
-          OldFormat.estimatedDroppableTombstoneRatio(
-            s, s.maxLocalDeletionTimeS + 1.0))
-      }
+    val rows = fanOut(spark, generations(spark, root)) { (g, fs) =>
+      val s = OldFormat.readStats2x(g.read(fs, "Statistics.db"),
+        g.path("Statistics.db"))
+      val beforeAll = OldFormat.droppableTombstonesBefore(
+        s, s.minTimestampUs / 1000000.0 - 1.0)
+      val afterAll = OldFormat.droppableTombstonesBefore(
+        s, s.maxLocalDeletionTimeS + 1.0)
+      val mid = OldFormat.droppableTombstonesBefore(s,
+        (s.minTimestampUs / 1000000.0 + s.maxLocalDeletionTimeS) / 2.0)
+      require(mid >= beforeAll && mid <= afterAll,
+        s"${g.dataPath}: histogram sum not monotone " +
+          s"($beforeAll, $mid, $afterAll)")
+      Some((g.sstable, beforeAll, afterAll, s.estColumnsTotal,
+        OldFormat.estimatedDroppableTombstoneRatio(
+          s, s.maxLocalDeletionTimeS + 1.0)))
+    }
       .collect().toSeq.sortBy(_._1)
     graft.Scratch.delete(outKa)
     spark.createDataset(rows).toDF("sstable", "droppable_before",
       "droppable_total", "est_columns", "ratio")
+  }
+
+  /** A modern generation's summary resampled to interval 8, streamed
+    * from its Index.db — the rebuild branch of
+    * `cloneWithNewSummarySamplingLevel`'s decision tree the budget
+    * audits drive. */
+  private def resampledTo8(g: Generation,
+      fs: FileSystem): SSTableComponents.Summary = {
+    val current = SSTableComponents.readSummary(g.read(fs, "Summary.db"))
+    val idx = fs.open(new HPath(g.path("Index.db")))
+    try SSTableComponents.resampleSummary(current, 8,
+      new java.io.DataInputStream(
+        new java.io.BufferedInputStream(idx, 64 * 1024)),
+      oldEra = false, g.dataPath)
+    finally idx.close()
   }
 
   /** Registered `src_sstable_summary_budget` — the
@@ -515,34 +470,17 @@ object SSTableMetadata {
     // read-only consumer of the shared plain set (summaries are
     // resampled IN MEMORY; nothing on disk changes)
     val root = SSTableBinaryV2.plainGenSetShared(spark, sfDir)
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
     // executor-side: resample each generation to interval 8 — finer
     // than the written ladder, so the decision tree MUST take the
     // streamed-rebuild branch (the downsample branch would refuse)
-    val fine: Seq[(String, Array[Byte])] = spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val base = dataPath.stripSuffix("-Data.db")
-        val current = SSTableComponents.readSummary(
-          readAll(fs, base + "-Summary.db"))
-        val idx = fs.open(new HPath(base + "-Index.db"))
-        val s = try SSTableComponents.resampleSummary(current, 8,
-          new java.io.DataInputStream(
-            new java.io.BufferedInputStream(idx, 64 * 1024)),
-          oldEra = false, dataPath)
-        finally idx.close()
-        (dataPath.split('/').takeRight(2).mkString("/"),
-          SSTableComponents.writeSummary(s.sampled,
-            s.sizeAtFullSampling.toLong * s.minIndexInterval,
-            s.firstKey, s.lastKey, s.minIndexInterval))
+    val fine: Seq[(String, Array[Byte])] =
+      fanOut(spark, generations(spark, root)) { (g, fs) =>
+        val s = resampledTo8(g, fs)
+        Some((g.sstable, SSTableComponents.writeSummary(s.sampled,
+          s.sizeAtFullSampling.toLong * s.minIndexInterval,
+          s.firstKey, s.lastKey, s.minIndexInterval)))
       }
-      .collect().toSeq.sortBy(_._1)
+        .collect().toSeq.sortBy(_._1)
     def genOf(name: String): Int =
       "\\d+".r.findFirstIn(name.split('/').last).get.toInt
     val withRate = fine.map { case (name, bytes) =>
@@ -625,32 +563,14 @@ object SSTableMetadata {
     // read-only consumer of the shared plain set (in-memory
     // resample, meters, the activity-table roundtrip)
     val root = SSTableBinaryV2.plainGenSetShared(spark, sfDir)
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
     // the budget regime needs marks the written ladder is too coarse
     // for at small SFs: resample to interval 8 executor-side, the
     // same streamed-rebuild branch the summary-budget audit drives
-    val fine: Seq[(String, Int)] = spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val base = dataPath.stripSuffix("-Data.db")
-        val current = SSTableComponents.readSummary(
-          readAll(fs, base + "-Summary.db"))
-        val idx = fs.open(new HPath(base + "-Index.db"))
-        val s = try SSTableComponents.resampleSummary(current, 8,
-          new java.io.DataInputStream(
-            new java.io.BufferedInputStream(idx, 64 * 1024)),
-          oldEra = false, dataPath)
-        finally idx.close()
-        (dataPath.split('/').takeRight(2).mkString("/"),
-          s.sampled.size)
+    val fine: Seq[(String, Int)] =
+      fanOut(spark, generations(spark, root)) { (g, fs) =>
+        Some((g.sstable, resampledTo8(g, fs).sampled.size))
       }
-      .collect().toSeq.sortBy(_._1)
+        .collect().toSeq.sortBy(_._1)
     def genOf(name: String): Int =
       "\\d+".r.findFirstIn(name.split('/').last).get.toInt
     val tick = RestorableMeter.TickIntervalNanos
@@ -898,44 +818,23 @@ object SSTableMetadata {
   def describeStats(spark: SparkSession, root: String,
       sizes: Map[String, Long] = Map.empty): DataFrame = {
     import spark.implicits._
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
     val bcSizes = spark.sparkContext.broadcast(sizes)
-    spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .flatMap { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val name = dataPath.split('/').last
-        val version = SSTableBinaryV2.versionOf(name)
-        val oldEra = version.nonEmpty && version.charAt(0) < 'm'
-        val base = dataPath.stripSuffix("-Data.db")
-        val statsPath = base + "-Statistics.db"
-        if (oldEra || !comps.contains(statsPath)) None
-        else {
-        val statsBytes = readAll(fs, statsPath)
+    fanOut(spark, generations(spark, root)) { (g, fs) =>
+      val dataPath = g.dataPath
+      val version = g.version
+      if (g.oldEra || !g.has("Statistics.db")) None
+      else {
+        val statsBytes = g.read(fs, "Statistics.db")
         // the serialization header's clustering types render the
-        // bound values; a foreign file whose value bytes don't parse
-        // under the declared type serves hex rather than refusing
-        // the whole panel (the value is still the file's truth)
+        // bound values
         val clTypes = scala.util.Try(
           BigFormat.readStats(statsBytes).clusteringTypes)
           .getOrElse(Nil)
-        def renderBounds(vs: Seq[Seq[Byte]]): Option[String] =
-          if (vs.isEmpty) None
-          else Some(vs.zipWithIndex.map { case (v, i) =>
-            scala.util.Try(BigFormat.renderValue(
-              clTypes.lift(i).getOrElse(BigFormat.Utf8Type), v.toArray))
-              .getOrElse(v.map("%02x".format(_)).mkString)
-          }.mkString(":"))
         BigFormat.readStatsModern(statsBytes, version)
           .map { s =>
-          val key = dataPath.split('/').takeRight(2).mkString("/")
+          val key = g.sstable
           bcSizes.value.get(key).foreach { dataLen =>
-            val compressed = comps.contains(base + "-CompressionInfo.db")
+            val compressed = g.has("CompressionInfo.db")
             if (compressed) {
               require(s.compressionRatio ==
                 dataLen.toDouble / s.partitionSizeTotal,
@@ -985,12 +884,11 @@ object SSTableMetadata {
             commitlog_upper_position = s.commitLogUpper._2,
             commitlog_lower_segment = s.commitLogLower._1,
             commitlog_lower_position = s.commitLogLower._2,
-            min_clustering = renderBounds(s.minClusteringValues),
-            max_clustering = renderBounds(s.maxClusteringValues))
-        }
+            min_clustering = renderBounds(clTypes, s.minClusteringValues),
+            max_clustering = renderBounds(clTypes, s.maxClusteringValues))
         }
       }
-      .toDF()
+    }.toDF()
   }
 
   final case class ExpiredBlocker(
@@ -1007,31 +905,15 @@ object SSTableMetadata {
     * treated as overlapping by callers. */
   private def tokenSpans(spark: SparkSession, root: String): DataFrame = {
     import spark.implicits._
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    val bc = spark.sparkContext.broadcast(hconf)
-    spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val name = dataPath.split('/').last
-        val version = SSTableBinaryV2.versionOf(name)
-        val oldEra = version.nonEmpty && version.charAt(0) < 'm'
-        val base = dataPath.stripSuffix("-Data.db")
-        val sum = comps.find(_ == base + "-Summary.db").flatMap { p =>
-          scala.util.Try {
-            if (oldEra) SSTableComponents.readSummary2x(readAll(fs, p))
-            else SSTableComponents.readSummary(readAll(fs, p))
-          }.toOption
-        }
-        (dataPath.split('/').takeRight(2).mkString("/"),
-          sum.map(s => BigFormat.murmur3Token(s.firstKey)),
-          sum.map(s => BigFormat.murmur3Token(s.lastKey)))
-      }
-      .toDF("sstable", "first_token", "last_token")
+    fanOut(spark, generations(spark, root)) { (g, fs) =>
+      val sum =
+        if (!g.has("Summary.db")) None
+        else scala.util.Try(Generation.readSummary(
+          g.read(fs, "Summary.db"), g.oldEra)).toOption
+      Some((g.sstable,
+        sum.map(s => BigFormat.murmur3Token(s.firstKey)),
+        sum.map(s => BigFormat.murmur3Token(s.lastKey))))
+    }.toDF("sstable", "first_token", "last_token")
   }
 
   /** The `sstableexpiredblockers` tool's role, sidecar-only: a
@@ -1234,16 +1116,9 @@ object SSTableMetadata {
     import spark.implicits._
     require(budgetMarks > 0,
       s"summary budget must be positive, got $budgetMarks")
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
+    val gens = generations(spark, root)
     require(gens.nonEmpty, s"$root holds no generations")
-    val parents = gens.map(_._1.split('/').dropRight(1).mkString("/"))
-      .distinct
-    require(parents.size <= 1,
-      s"summary redistribution targets ONE table directory; $root " +
-        s"spans ${parents.size} (run per directory): " +
-        parents.sorted.take(3).mkString(", "))
+    requireOneTableDir(gens, root, "summary redistribution")
     def keyOf(p: String): String = p.split('/').takeRight(2).mkString("/")
     // duplicate sstable rows (an activity table appended over time)
     // collapse by MAX — deterministic, and "was recently hot" is the
@@ -1270,38 +1145,24 @@ object SSTableMetadata {
     // the documented meterless-coldest ranking but says so LOUDLY
     // instead of refusing (a cluster-wide sstable_activity export
     // legitimately has no row for a cold table)
-    if (rates.nonEmpty && !gens.exists(g => rates.contains(keyOf(g._1))))
+    if (rates.nonEmpty && !gens.exists(g => rates.contains(g.sstable)))
       System.err.println(
         s"WARNING: --activity table matches no generation under " +
           s"$root — every file ranks coldest. If this directory is " +
           "not actually cold, check the key shape: expected " +
-          s"'${keyOf(gens.head._1)}', table has: " +
+          s"'${gens.head.sstable}', table has: " +
           s"${rates.keys.take(3).mkString(", ")}")
-    val bc = spark.sparkContext.broadcast(hconf)
     // pass 1: marks per generation — one Summary.db header each.
     // The third column is the 2.x samplingLevel (-1 on modern files,
     // whose summaries ladder by INTERVAL instead)
-    val marks: Seq[(String, Int, Int)] = spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val name = dataPath.split('/').last
-        val version = SSTableBinaryV2.versionOf(name)
-        val oldEra = version.nonEmpty && version.charAt(0) < 'm'
-        val base = dataPath.stripSuffix("-Data.db")
-        val sumPath = comps.find(_ == base + "-Summary.db")
-          .getOrElse(throw new IllegalStateException(
-            s"$dataPath: no Summary.db to redistribute"))
-        val bytes = readAll(fs, sumPath)
-        if (oldEra)
-          (dataPath, SSTableComponents.readSummary2x(bytes).sampled.size,
-            SSTableComponents.readSummaryLevel2x(bytes))
-        else
-          (dataPath, SSTableComponents.readSummary(bytes).sampled.size,
-            -1)
-      }
+    val marks: Seq[(String, Int, Int)] = fanOut(spark, gens) { (g, fs) =>
+      if (!g.has("Summary.db")) throw new IllegalStateException(
+        s"${g.dataPath}: no Summary.db to redistribute")
+      val bytes = g.read(fs, "Summary.db")
+      Some((g.dataPath,
+        Generation.readSummary(bytes, g.oldEra).sampled.size,
+        if (g.oldEra) SSTableComponents.readSummaryLevel2x(bytes) else -1))
+    }
       .collect().toSeq.sortBy(_._1)
     val factors = SSTableComponents.redistributeSummaries(
       marks.map { case (p, m, _) =>
@@ -1311,61 +1172,55 @@ object SSTableMetadata {
     val bcMarks = spark.sparkContext.broadcast(
       marks.map { case (p, m, lvl) => p -> ((m, lvl)) }.toMap)
     // pass 2: copy every generation, re-emitting only Summary.db
-    val plan = spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val f = bcFactors.value(dataPath)
-        val base = dataPath.stripSuffix("-Data.db")
-        val sumPath = base + "-Summary.db"
-        val outFs = FileSystem.get(
-          java.net.URI.create(outDir.stripSuffix("/")), conf)
-        val (passMarks, level2x) = bcMarks.value(dataPath)
-        var after = 0
-        comps.foreach { src =>
-          val dst = new HPath(
-            s"${outDir.stripSuffix("/")}/${src.split('/').last}")
-          if (src == sumPath && f > 1) {
-            val bytes = readAll(fs, src)
-            val os = outFs.create(dst, true)
-            try {
-              if (level2x >= 0) {
-                // the 2.x era coarsens by SAMPLING LEVEL in the
-                // literal Downsampling-pattern order — the
-                // reference's own 2.x redistribution branch
-                // (cassandra-2 cloneWithNewSummarySamplingLevel →
-                // IndexSummaryBuilder.downsample); interval and
-                // sizeAtFullSampling stay untouched
-                val cur = SSTableComponents.readSummary2x(bytes)
-                val (thinned, newLevel) = SSTableComponents
-                  .downsampleSummary2x(cur, level2x, f)
-                after = thinned.sampled.size
-                os.write(SSTableComponents.writeSummary2x(
-                  thinned.sampled,
-                  thinned.sizeAtFullSampling.toLong *
-                    thinned.minIndexInterval,
-                  thinned.firstKey, thinned.lastKey,
-                  thinned.minIndexInterval, newLevel))
-              } else {
-                val s = SSTableComponents.downsampleSummary(
-                  SSTableComponents.readSummary(bytes), f)
-                after = s.sampled.size
-                os.write(SSTableComponents.writeSummary(s.sampled,
-                  s.sizeAtFullSampling.toLong * s.minIndexInterval,
-                  s.firstKey, s.lastKey, s.minIndexInterval))
-              }
-            } finally os.close()
-          } else {
-            // a factor-1 summary's mark count is pass 1's — no second
-            // sidecar parse for the (typical) untouched majority
-            if (src == sumPath) after = passMarks
-            streamCopy(fs, src, outFs, dst)
-          }
+    val plan = fanOut(spark, gens) { (g, fs) =>
+      val f = bcFactors.value(g.dataPath)
+      val outFs = FileSystem.get(
+        java.net.URI.create(outDir.stripSuffix("/")), fs.getConf)
+      val (passMarks, level2x) = bcMarks.value(g.dataPath)
+      var after = 0
+      g.components.keys.foreach { c =>
+        val src = g.path(c)
+        val dst = new HPath(
+          s"${outDir.stripSuffix("/")}/${src.split('/').last}")
+        if (c == "Summary.db" && f > 1) {
+          val bytes = g.read(fs, c)
+          val os = outFs.create(dst, true)
+          try {
+            if (level2x >= 0) {
+              // the 2.x era coarsens by SAMPLING LEVEL in the
+              // literal Downsampling-pattern order — the
+              // reference's own 2.x redistribution branch
+              // (cassandra-2 cloneWithNewSummarySamplingLevel →
+              // IndexSummaryBuilder.downsample); interval and
+              // sizeAtFullSampling stay untouched
+              val cur = SSTableComponents.readSummary2x(bytes)
+              val (thinned, newLevel) = SSTableComponents
+                .downsampleSummary2x(cur, level2x, f)
+              after = thinned.sampled.size
+              os.write(SSTableComponents.writeSummary2x(
+                thinned.sampled,
+                thinned.sizeAtFullSampling.toLong *
+                  thinned.minIndexInterval,
+                thinned.firstKey, thinned.lastKey,
+                thinned.minIndexInterval, newLevel))
+            } else {
+              val s = SSTableComponents.downsampleSummary(
+                SSTableComponents.readSummary(bytes), f)
+              after = s.sampled.size
+              os.write(SSTableComponents.writeSummary(s.sampled,
+                s.sizeAtFullSampling.toLong * s.minIndexInterval,
+                s.firstKey, s.lastKey, s.minIndexInterval))
+            }
+          } finally os.close()
+        } else {
+          // a factor-1 summary's mark count is pass 1's — no second
+          // sidecar parse for the (typical) untouched majority
+          if (c == "Summary.db") after = passMarks
+          streamCopy(fs, src, outFs, dst)
         }
-        (keyOf(dataPath), f, after)
       }
+      Some((g.sstable, f, after))
+    }
       .collect().toSeq.sortBy(_._1)
     val byPath = marks.map { case (p, m, _) => keyOf(p) -> m }.toMap
     spark.createDataset(plan.map { case (k, f, after) =>
@@ -1753,72 +1608,49 @@ object SSTableMetadata {
     import spark.implicits._
     require(level.isDefined || repairedAt.isDefined,
       "rewriteMetadata: nothing to set")
-    val hconf = new SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
-    val gens = listGenerations(root, hconf.value)
-    // the output is FLAT by component name (one table directory is
-    // the tools' unit of operation) — a recursive listing spanning
-    // several directories (a keyspace root, or a table with
-    // snapshots/backups subdirs) could hold same-named generations
-    // whose flat copies would clobber each other, so that shape
-    // refuses up front instead of interleaving silently
-    val parents = gens.map(_._1.split('/').dropRight(1).mkString("/"))
-      .distinct
-    require(parents.size <= 1,
-      s"metadata surgery targets ONE table directory; $root spans " +
-        s"${parents.size} (run per directory): " +
-        parents.sorted.take(3).mkString(", "))
-    val bc = spark.sparkContext.broadcast(hconf)
-    spark.createDataset(gens)
-      .repartition(math.min(gens.size.max(1),
-        spark.sparkContext.defaultParallelism))
-      .map { case (dataPath, comps) =>
-        val conf = bc.value.value
-        val fs = FileSystem.get(java.net.URI.create(dataPath), conf)
-        val name = dataPath.split('/').last
-        val version = SSTableBinaryV2.versionOf(name)
-        require(version.nonEmpty && version.charAt(0) >= 'm',
-          s"$dataPath: metadata surgery serves modern-era " +
-            "generations only (2.x StatsMetadata has its own layout)")
-        val checksummed = BigFormat.versionHasMetadataChecksum(version)
-        val base = dataPath.stripSuffix("-Data.db")
-        val statsPath = base + "-Statistics.db"
-        require(comps.contains(statsPath),
-          s"$dataPath: no Statistics.db to rewrite")
-        val bytes = readAll(fs, statsPath)
-        val stats = BigFormat.readStatsModern(bytes, version)
-          .getOrElse(throw new IllegalStateException(
-            s"$dataPath: Statistics.db carries no STATS component — " +
-              "nothing to set a level/repairedAt on"))
-        // BYTE-SURGICAL: only the two fields' bytes change (and the
-        // n-series component CRC) — clustering-value lists,
-        // commit-log intervals, pending-repair sessions and any
-        // other fields a real cluster's file carries survive
-        // bit-exact, which is the whole "only level/repairedAt
-        // replaced" contract
-        val rewritten = BigFormat.patchStatsFields(bytes, checksummed,
-          level, repairedAt)
-        val outFs = FileSystem.get(
-          java.net.URI.create(outDir.stripSuffix("/")), conf)
-        comps.foreach { src =>
-          // flat copy by component name: a surgery run targets ONE
-          // table directory (guarded above)
-          val dst = new HPath(
-            s"${outDir.stripSuffix("/")}/${src.split('/').last}")
-          if (src == statsPath) {
-            val os = outFs.create(dst, true)
-            try os.write(rewritten) finally os.close()
-          } else {
-            // Data.db streams — a multi-GB data file must neither
-            // materialize on-heap nor trip readAll's sidecar bound
-            streamCopy(fs, src, outFs, dst)
-          }
+    val gens = generations(spark, root)
+    requireOneTableDir(gens, root, "metadata surgery")
+    fanOut(spark, gens) { (g, fs) =>
+      val dataPath = g.dataPath
+      val version = g.version
+      require(version.nonEmpty && !g.oldEra,
+        s"$dataPath: metadata surgery serves modern-era " +
+          "generations only (2.x StatsMetadata has its own layout)")
+      val checksummed = BigFormat.versionHasMetadataChecksum(version)
+      require(g.has("Statistics.db"),
+        s"$dataPath: no Statistics.db to rewrite")
+      val bytes = g.read(fs, "Statistics.db")
+      val stats = BigFormat.readStatsModern(bytes, version)
+        .getOrElse(throw new IllegalStateException(
+          s"$dataPath: Statistics.db carries no STATS component — " +
+            "nothing to set a level/repairedAt on"))
+      // BYTE-SURGICAL: only the two fields' bytes change (and the
+      // n-series component CRC) — clustering-value lists,
+      // commit-log intervals, pending-repair sessions and any
+      // other fields a real cluster's file carries survive
+      // bit-exact, which is the whole "only level/repairedAt
+      // replaced" contract
+      val rewritten = BigFormat.patchStatsFields(bytes, checksummed,
+        level, repairedAt)
+      val outFs = FileSystem.get(
+        java.net.URI.create(outDir.stripSuffix("/")), fs.getConf)
+      g.components.keys.foreach { c =>
+        // flat copy by component name: a surgery run targets ONE
+        // table directory (guarded above)
+        val src = g.path(c)
+        val dst = new HPath(
+          s"${outDir.stripSuffix("/")}/${src.split('/').last}")
+        if (c == "Statistics.db") {
+          val os = outFs.create(dst, true)
+          try os.write(rewritten) finally os.close()
+        } else {
+          // Data.db streams — a multi-GB data file must neither
+          // materialize on-heap nor trip the sidecar read's bound
+          streamCopy(fs, src, outFs, dst)
         }
-        1L
       }
-      .toDF("one").agg(org.apache.spark.sql.functions.sum("one"))
-      .collect().headOption.flatMap(r =>
-        Option(r.get(0)).map(_.asInstanceOf[Long])).getOrElse(0L)
+      Some(1L)
+    }.count()
   }
 
   /** Registered `src_sstable_relevel` — the surgery end-to-end: the
@@ -1963,6 +1795,21 @@ object SSTableMetadata {
     described
   }
 
+  /** Registered `src_sstable_metadata`: the sidecar-only inventory
+    * over sink-written generation sets — uncompressed, compressed
+    * (the lz4 rewrite shows its compressor and one extra component),
+    * and a pre-3.0 ka set (whose 2.x StatsMetadata supplies
+    * `min_writetime_us` where the era has no serialization header).
+    * The oracle replays the fixture arithmetic per generation: exact
+    * partition counts, stats minima, component census. The
+    * no-Data.db property is ORACLE-GATED, not just spec-gated: every
+    * Data.db is garbled before describing, so a describe() that ever
+    * starts opening data files fails the correctness run loudly.
+    * The token-order columns (`first_key`/`last_key`/`est_keys_max`)
+    * are ALSO oracle-gated — audit mode requires each Summary fact to
+    * match the independently streamed Index.db ground truth while the
+    * row is produced — then dropped, since DuckDB cannot replay the
+    * key rendering itself. */
   def metadataAudit(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val in = SSTableBinaryV2.binaryFixtureShared(spark, sfDir)

@@ -670,7 +670,10 @@ object StreamingOps {
   final case class CellArr(partition_key: String, clustering: String,
       row_kind: String, name: Option[String], value: Option[String],
       writetime_us: Option[Long], deletion_us: Option[Long])
-  final case class CellVer(cl: String, nm: String, wt: Long, v: String)
+  /** One version of a cell slot: a live write, or (`del`) a cell
+    * tombstone at its deletion time. */
+  final case class CellVer(cl: String, nm: String, wt: Long, v: String,
+      del: Boolean = false)
   final case class RtB(cl: String, inc: Boolean, del: Long)
   /** Per-partition merge state: tombstone maxima, the partition's
     * range-tombstone bound lists (ranges-per-partition sized — the
@@ -712,8 +715,9 @@ object StreamingOps {
 
   /** The stateful streaming LWW merge, raw emissions: winners keyed by
     * partition, revised every micro-batch that touches the partition.
-    * Each batch the group (a) folds new cells into the surviving
-    * version list and new tombstones into the per-partition maxima,
+    * Each batch the group (a) folds new cells and cell tombstones into
+    * the surviving version list and new row/partition/range
+    * tombstones into the per-partition maxima,
     * (b) prunes freshly-shadowed versions (a tombstone arriving AFTER
     * the cells it shadows retroactively deletes them — the cross-batch
     * revision a static batch job never faces), and (c) emits the
@@ -754,6 +758,12 @@ object StreamingOps {
                   case "ROW" | "PK_LIVENESS" =>
                     vers = vers :+ CellVer(r.clustering, r.name.orNull,
                       r.writetime_us.get, r.value.orNull)
+                  case "CELL_DELETION" =>
+                    // a cell tombstone competes as a version of its
+                    // slot at its deletion time, as in the batch merge
+                    vers = vers :+ CellVer(r.clustering, r.name.orNull,
+                      r.deletion_us.orElse(r.writetime_us).get, null,
+                      del = true)
                   case "ROW_DELETION" =>
                     rowDels = rowDels.updated(r.clustering,
                       math.max(rowDels.getOrElse(r.clustering,
@@ -789,20 +799,27 @@ object StreamingOps {
                     (if (eb.inc) cl <= eb.cl else cl < eb.cl) =>
                   math.max(sb.del, eb.del)
               }.foldLeft(Long.MinValue)(math.max)
-              val live = vers.filter(v => v.wt > partDel &&
+              // a tombstone at or before a row/partition/range
+              // deletion can never beat the versions that survive it,
+              // so one shadowing rule prunes both kinds
+              val survivors = vers.filter(v => v.wt > partDel &&
                 v.wt > rowDels.getOrElse(v.cl, Long.MinValue) &&
                 v.wt > rtDel(v.cl))
               val rev = st.rev + 1
               state.update(LwwSt(partDel, rowDels, starts, ends,
-                live, rev))
-              val winners = live.groupBy(v => (v.cl, v.nm)).toSeq
-                .map { case ((cl, nm), vs) =>
-                  // (writetime, value) lexicographic max — the batch
-                  // merge's max(struct(writetime_us, value)) verbatim;
-                  // a null value (PK_LIVENESS) loses any same-writetime
-                  // tie, as DESC null-last window ordering does
-                  val w = vs.maxBy(v => (v.wt, Option(v.v).getOrElse("")))
-                  LwwEmit(pk, cl, nm, w.v, Some(w.wt), vs.size.toLong, rev)
+                survivors, rev))
+              val winners = survivors.groupBy(v => (v.cl, v.nm)).toSeq
+                .flatMap { case ((cl, nm), vs) =>
+                  // (time, tombstone, value) lexicographic max — the
+                  // batch merge's ranking verbatim: newest wins, a
+                  // tombstone wins a tie, and a null value
+                  // (PK_LIVENESS) loses any same-writetime tie, as
+                  // DESC null-last window ordering does. A winning
+                  // tombstone emits nothing.
+                  val w = vs.maxBy(v =>
+                    (v.wt, v.del, Option(v.v).getOrElse("")))
+                  Option.when(!w.del)(LwwEmit(pk, cl, nm, w.v, Some(w.wt),
+                    vs.count(!_.del).toLong, rev))
                 }
               (LwwEmit(pk, null, null, null, None, 0L, rev) +: winners)
                 .iterator

@@ -2,7 +2,7 @@ package graft
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import graft.sources.{BigFormat, SSTableBinaryV2, SSTableDumpBridge}
+import graft.sources.{BigFormat, Generation, SSTableBinaryV2, SSTableDumpBridge}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -647,13 +647,13 @@ class BigFormatSpec extends AnyFunSuite {
   }
 
   test("filename era detection: new-style vs old-style (≤2.1) names") {
-    assert(SSTableBinaryV2.versionOf("nb-1-big-Data.db") === "nb")
-    assert(SSTableBinaryV2.versionOf("me-12-big-Statistics.db") === "me")
+    assert(Generation.versionOf("nb-1-big-Data.db") === "nb")
+    assert(Generation.versionOf("me-12-big-Statistics.db") === "me")
     // real 2.1 files carry keyspace/table in the name; the version
     // sits third-from-last
-    assert(SSTableBinaryV2.versionOf(
+    assert(Generation.versionOf(
       "mykeyspace-mytable-ka-3-Data.db") === "ka")
-    assert(SSTableBinaryV2.versionOf("graft-documents-jb-1-Data.db")
+    assert(Generation.versionOf("graft-documents-jb-1-Data.db")
       === "jb")
   }
 
@@ -662,13 +662,13 @@ class BigFormatSpec extends AnyFunSuite {
     // contract for generation-numbered landing zones
     val names = Seq("d/nb-10-big-Data.db", "d/nb-2-big-Data.db",
       "d/nb-1-big-Data.db", "d/me-3-big-Data.db")
-    val sorted = names.sortBy(SSTableBinaryV2.generationSortKey)
+    val sorted = names.sortBy(Generation.generationSortKey)
     assert(sorted === Seq("d/nb-1-big-Data.db", "d/nb-2-big-Data.db",
       "d/me-3-big-Data.db", "d/nb-10-big-Data.db"))
     // directories group first: files of one table stay contiguous
     val twoDirs = Seq("t2/nb-1-big-Data.db", "t1/nb-10-big-Data.db",
       "t1/nb-2-big-Data.db")
-    assert(twoDirs.sortBy(SSTableBinaryV2.generationSortKey) ===
+    assert(twoDirs.sortBy(Generation.generationSortKey) ===
       Seq("t1/nb-2-big-Data.db", "t1/nb-10-big-Data.db",
         "t2/nb-1-big-Data.db"))
   }
@@ -3445,6 +3445,94 @@ class SSTableBinarySpec extends SparkSpec {
       assert(back.select("partition_key").as[String].collect().toSet ===
         Set("p1", "p2"))
     } finally Scratch.delete(out)
+  }
+
+  /** A sink-written one-row-per-source frame: each source path names
+    * the generation the sink writes for it. */
+  private def sinkRows(sources: Seq[(String, String)])
+      : org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val wt = 1609459200L * 1000000L
+    sources.map { case (pk, src) =>
+      (pk, Seq("c"), "ROW", Some("v"),
+        Some(("x", wt, None: Option[Int], None: Option[Long])),
+        None: Option[Long], src)
+    }
+      .toDF("partition_key", "clustering", "row_kind", "name",
+        "cell_t", "deletion_us", "sstable")
+      .withColumn("cell", org.apache.spark.sql.functions.struct(
+        col("cell_t._1").as("value"), col("cell_t._2").as("writetime_us"),
+        col("cell_t._3").as("ttl_s"), col("cell_t._4").as("expire_us")))
+      .drop("cell_t")
+  }
+
+  test("point lookup: a Filter.db past 2 GiB fails naming the file") {
+    val out = Scratch.dir("graft-bigfilter-")
+    try {
+      SSTableBinaryV2.writeSSTables(sinkRows(Seq("p1" -> "t/nb-1-big-Data.db")),
+        out.toString, "ks", "t")
+      val dir = out.resolve("ks").resolve("t")
+      // sparse: setLength writes no bytes
+      val raf = new java.io.RandomAccessFile(
+        dir.resolve("nb-1-big-Filter.db").toFile, "rw")
+      try raf.setLength((1L << 31) + 1) finally raf.close()
+      java.nio.file.Files.deleteIfExists(dir.resolve(".nb-1-big-Filter.db.crc"))
+      val ex = intercept[Exception] {
+        SSTableBinaryV2.readBinary(spark, dir.toString)
+          .filter(col("partition_key") === "p1").count()
+      }
+      val chain = Iterator.iterate[Throwable](ex)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+      assert(chain.contains("/ks/t/nb-1-big-Filter.db: sidecar too large"),
+        chain)
+    } finally Scratch.delete(out)
+  }
+
+  test("the connector and the inventory list the same generations") {
+    import scala.jdk.CollectionConverters._
+    val out = Scratch.dir("graft-listing-")
+    val ka = SSTableBinaryV2.writeOldFixture(spark, sfDir)
+    try {
+      SSTableBinaryV2.writeSSTables(sinkRows(Seq(
+        "p2" -> "t/nb-2-big-Data.db", "p10" -> "t/nb-10-big-Data.db")),
+        out.toString, "ks", "t")
+      val dir = out.resolve("ks").resolve("t")
+      def names(d: java.nio.file.Path): List[String] = {
+        val ls = java.nio.file.Files.list(d)
+        try ls.iterator().asScala.map(_.getFileName.toString).toList
+        finally ls.close()
+      }
+      names(ka.resolve("documents"))
+        .filter(_.startsWith("graft-documents-ka-1-"))
+        .foreach(n => java.nio.file.Files.copy(
+          ka.resolve("documents").resolve(n), dir.resolve(n)))
+      val staging = dir.resolve("_staging-x").resolve("y")
+      java.nio.file.Files.createDirectories(staging)
+      java.nio.file.Files.write(staging.resolve("Data.db"), Array[Byte](1))
+      // the local filesystem's checksums sit beside every sink file
+      assert(names(dir).exists(n => n.startsWith(".nb-2-big-") &&
+        n.endsWith(".crc")))
+      val want = Set("t/nb-2-big-Data.db", "t/nb-10-big-Data.db",
+        "t/graft-documents-ka-1-Data.db")
+      val scanned = SSTableBinaryV2.readBinary(spark, dir.toString,
+        Some(SSTableBinaryV2.Cql2x))
+        .select(col("sstable"), spark_partition_id().as("pid"))
+        .distinct().collect()
+        .map(r => r.getString(0) -> r.getInt(1)).toMap
+      val inventory = graft.sources.SSTableMetadata
+        .describe(spark, dir.toString).collect()
+        .map(r => r.getAs[String]("sstable") ->
+          r.getAs[Int]("n_components")).toMap
+      assert(scanned.keySet === want)
+      assert(inventory.keySet === want)
+      for (g <- Seq("nb-2", "nb-10"))
+        assert(inventory(s"t/$g-big-Data.db") ===
+          names(dir).count(_.startsWith(s"$g-big-")))
+      assert(scanned("t/nb-2-big-Data.db") < scanned("t/nb-10-big-Data.db"))
+    } finally {
+      Scratch.delete(out)
+      Scratch.delete(ka)
+    }
   }
 
   test("full pipeline runs unchanged over the binary path") {

@@ -375,6 +375,40 @@ class StreamingSpec extends SparkSpec {
     } finally Scratch.delete(dir)
   }
 
+  test("streaming LWW merge: cell tombstones a batch later compete as in the batch merge") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    // TtlOpsSpec's older/newer/tie slots, tombstones in the second
+    // micro-batch
+    val cells = Seq(
+      ("k", "c", "ROW", "older", "new", Some(200L), None),
+      ("k", "c", "ROW", "older", "old", Some(50L), None),
+      ("k", "c", "CELL_DELETION", "older", null, Some(100L), Some(100L)),
+      ("k", "c", "ROW", "newer", "old", Some(100L), None),
+      ("k", "c", "CELL_DELETION", "newer", null, Some(150L), Some(150L)),
+      ("k", "c", "CELL_DELETION", "newer", null, Some(200L), Some(200L)),
+      ("k", "c", "ROW", "tie", "x", Some(100L), None),
+      ("k", "c", "CELL_DELETION", "tie", null, Some(100L), Some(100L)))
+      .toDF("partition_key", "clustering", "row_kind", "name", "value",
+        "writetime_us", "deletion_us")
+    val dir = Scratch.dir("graft-lwwcelldel-")
+    try {
+      cells.withColumn("gen",
+          when(col("row_kind") === "CELL_DELETION", 2).otherwise(1))
+        .repartition(col("gen"))
+        .write.partitionBy("gen").mode("overwrite").parquet(dir.toString)
+      val raw = StreamingOps.lwwMergeStreamRaw(spark, dir.toString)
+        .localCheckpoint()
+      assert(raw.agg(max(col("rev"))).head().getLong(0) === 2L)
+      val collapsed = StreamingOps.collapseLwwStream(raw)
+      val batch = graft.ops.TtlOps.lwwMerge(cells)
+      assertSameRows(collapsed, batch)
+      assert(collapsed.select("name", "value", "writetime_us", "n_versions")
+        .as[(String, String, Long, Long)].collect().toSeq ===
+        Seq(("older", "new", 200L, 2L)))
+    } finally Scratch.delete(dir)
+  }
+
   test("streaming LWW merge: winners revised across micro-batches, final equals batch") {
     import org.apache.spark.sql.functions._
     val dir = StreamingOps.writeLwwStreamFixture(spark, sfDir)
